@@ -126,6 +126,18 @@ MEMOIZED_QUERIES = frozenset({
     "class_rebalance_downsample",
     "rfm_segments",
     "dsir_effective_sample_size",
+    # the modality x approval contingency family reads one pinned
+    # contingency kernel per row-key set (plans.dashboard.
+    # _approval_contingency) over the pinned scored fact
+    # (plans.dashboard._approved): the first build of a member runs the
+    # kernel's jobs, and the scored-fact pin's too if no other reader of
+    # it ran first in the session
+    "chi2_cells_modality_approval",
+    "g_test_modality_approval",
+    "cramers_v_modality_approval",
+    "mi_modality_approval",
+    "naive_bayes_approval",
+    "two_proportion_approval_test",
 })
 
 

@@ -50,7 +50,7 @@ _SHARED: dict[tuple[str, str, str], DataFrame | list[DataFrame]] = {}
 # of DIFFERENT (sf_dir, kind) keys must not serialize behind one slow
 # eager build, while same-key callers still wait-and-reuse. RLock, not
 # Lock, per key: builders NEST (e.g. the cal_rank_asc build lambda
-# calls the memoized _cal_scored) — a non-reentrant lock would
+# reads the memoized scored fact) — a non-reentrant lock would
 # self-deadlock on the same thread. Nesting across keys is acyclic
 # (a build only calls shared_frame for its own upstream), so per-key
 # locks cannot deadlock each other.

@@ -26,7 +26,12 @@ from pyspark.sql import functions as F
 from banking_streaming_etl_spark import datamodel
 from banking_streaming_etl_spark.functions import exact, portable, scores
 from banking_streaming_etl_spark.operators import memo, ranking
-from banking_streaming_etl_spark.plans.dashboard import _approved
+from banking_streaming_etl_spark.plans.dashboard import (
+    MODALITY_APPROVAL_CELLS_CTE,
+    _approval_contingency,
+    _approved,
+    _modality_approval_cells,
+)
 
 
 def _oracle_with(extra_ctes: str, body: str) -> str:
@@ -305,38 +310,19 @@ def chi2_cells_modality_approval(spark: SparkSession, sf_dir: str) -> DataFrame:
     to see WHICH cells drive the dependence) — the frequentist companion
     of `mi_modality_approval`'s information-theoretic screen.
 
-    All margins are exact integers from ONE cells aggregate (margins
-    re-aggregated from the cells, never a second corpus scan); expected
-    / contribution / residual are unrounded doubles from term-identical
-    expressions (exact rationals — ROUND would risk the .5 boundary).
-    The contingency table is model-sized at any corpus size. The cells
-    frame is PINNED (lazy localCheckpoint, round-14): its four
-    consumers (rows/cols/total margins + the wide output) each pushed a
-    different projection into the `_approved` subtree, so exchange
-    reuse missed and the plan re-derived the scored fact 4x (48 scans;
-    guide §2.4/§3.3 — after: one subtree, one pass)."""
-    cells = (
-        _approved(spark, sf_dir)
-        .groupBy("modalidade_pagamento", "transacao_aprovada")
-        .agg(F.count("*").cast("bigint").alias("n_celula"))
-        .localCheckpoint(eager=False)
-    )
-    rows = cells.groupBy("modalidade_pagamento").agg(
-        F.sum("n_celula").cast("bigint").alias("n_modalidade")
-    )
-    cols = cells.groupBy("transacao_aprovada").agg(
-        F.sum("n_celula").cast("bigint").alias("n_resultado")
-    )
-    total = cells.agg(F.sum("n_celula").cast("bigint").alias("n_total"))
+    Cells and margins are exact integers read from the shared pinned
+    (modality, approval) contingency kernel — one corpus aggregate per
+    session; expected / contribution / residual are unrounded doubles
+    from term-identical expressions (exact rationals — ROUND would risk
+    the .5 boundary). The contingency table is model-sized at any corpus
+    size."""
     esperado = (
         F.col("n_modalidade").cast("double")
         * F.col("n_resultado").cast("double")
     ) / F.col("n_total").cast("double")
     desvio = F.col("n_celula").cast("double") - F.col("_esp")
     return (
-        cells.join(F.broadcast(rows), "modalidade_pagamento")
-        .join(F.broadcast(cols), "transacao_aprovada")
-        .crossJoin(F.broadcast(total))
+        _modality_approval_cells(spark, sf_dir)
         .withColumn("_esp", esperado)
         .select(
             "modalidade_pagamento",
@@ -349,21 +335,8 @@ def chi2_cells_modality_approval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CHI2_CTES = """,
-chi_cells AS (
-    SELECT modalidade_pagamento, transacao_aprovada,
-           CAST(COUNT(*) AS BIGINT) AS n_celula,
-           CAST(SUM(COUNT(*)) OVER (PARTITION BY modalidade_pagamento)
-                AS BIGINT) AS n_modalidade,
-           CAST(SUM(COUNT(*)) OVER (PARTITION BY transacao_aprovada)
-                AS BIGINT) AS n_resultado,
-           CAST(SUM(COUNT(*)) OVER () AS BIGINT) AS n_total
-    FROM approved
-    GROUP BY modalidade_pagamento, transacao_aprovada
-)"""
-
 CHI2_CELLS_SQL = _oracle_with(
-    _CHI2_CTES,
+    MODALITY_APPROVAL_CELLS_CTE,
     """
 SELECT modalidade_pagamento, transacao_aprovada, n_celula,
        esp AS esperado,
@@ -374,7 +347,7 @@ FROM (
     SELECT modalidade_pagamento, transacao_aprovada, n_celula,
            CAST(n_modalidade AS DOUBLE) * CAST(n_resultado AS DOUBLE)
                / CAST(n_total AS DOUBLE) AS esp
-    FROM chi_cells
+    FROM ma_cells
 )""",
 )
 
@@ -1637,22 +1610,16 @@ def two_proportion_approval_test(
     group — the standard A/B-test readout. Every output is an exact
     integer ratio pushed through a fixed compare/multiply/divide/sqrt
     ladder (sqrt is IEEE-correctly-rounded), so all doubles are
-    bit-identical cross-engine with no rounding. ONE corpus aggregate;
-    the z scalar re-aggregates from the 2-row group table."""
-    ap = _approved(spark, sf_dir).select(
-        F.when(
+    bit-identical cross-engine with no rounding. The group table is the
+    shared pinned (grupo, approval) contingency kernel; the z scalar
+    re-aggregates from its 2 rows."""
+    grp = _approval_contingency(
+        spark,
+        sf_dir,
+        grupo=F.when(
             F.col("valor_transacao") > ATE_VALUE_EDGES[1], "alto_valor"
-        )
-        .otherwise("baixo_valor")
-        .alias("grupo"),
-        F.col("transacao_aprovada").cast("int").alias("y"),
-    )
-    grp = ap.groupBy("grupo").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("y").cast("bigint").alias("aprovadas"),
-        # pinned (round-14): the wide branch + the pooled-z re-aggregate
-        # re-derived the _approved subtree (2 passes before; §2.4/§3.3)
-    ).localCheckpoint(eager=False)
+        ).otherwise("baixo_valor"),
+    ).select("grupo", "n", F.col("n_y").alias("aprovadas"))
     z = F.lit(WILSON_Z)
     nd = F.col("n").cast("double")
     p = F.col("aprovadas").cast("double") / nd
@@ -1951,32 +1918,16 @@ def cramers_v_modality_approval(
     size the chi-squared cell screen doesn't give. The chi2 TOTAL is a
     cross-cell sum of double terms, so it rides the deterministic
     sorted fold (cell key = modality|outcome) — the same pattern that
-    unlocked ANOVA's SSB; margins re-aggregate from the cells table,
-    never a second corpus scan."""
-    cells = (
-        _approved(spark, sf_dir)
-        .groupBy("modalidade_pagamento", "transacao_aprovada")
-        .agg(F.count("*").cast("bigint").alias("n_celula"))
-        # pinned (round-14): 5 consumers re-derived _approved (60 scans
-        # before; guide §2.4/§3.3 — after: one subtree, one pass)
-        .localCheckpoint(eager=False)
-    )
-    rows = cells.groupBy("modalidade_pagamento").agg(
-        F.sum("n_celula").cast("bigint").alias("n_modalidade")
-    )
-    cols = cells.groupBy("transacao_aprovada").agg(
-        F.sum("n_celula").cast("bigint").alias("n_resultado")
-    )
+    unlocked ANOVA's SSB; cells and margins come from the shared pinned
+    (modality, approval) contingency kernel, never a corpus scan."""
+    cells = _modality_approval_cells(spark, sf_dir)
     total = cells.agg(
         F.sum("n_celula").cast("bigint").alias("n_total"),
         F.count_distinct("modalidade_pagamento").cast("bigint").alias("r"),
         F.count_distinct("transacao_aprovada").cast("bigint").alias("c"),
     )
     joined = (
-        cells.join(F.broadcast(rows), "modalidade_pagamento")
-        .join(F.broadcast(cols), "transacao_aprovada")
-        .crossJoin(F.broadcast(total))
-        .withColumn(
+        cells.withColumn(
             "_esp",
             F.col("n_modalidade").cast("double")
             * F.col("n_resultado").cast("double")
@@ -2029,25 +1980,12 @@ def cramers_v_modality_approval(
     )
 
 
-_CRAMER_CTES = f""",
-cv_cells AS (
-    SELECT modalidade_pagamento, transacao_aprovada,
-           modalidade_pagamento || '|'
-               || CAST(transacao_aprovada AS VARCHAR) AS chave,
-           CAST(COUNT(*) AS BIGINT) AS n_celula,
-           CAST(SUM(COUNT(*)) OVER (PARTITION BY modalidade_pagamento)
-                AS BIGINT) AS n_modalidade,
-           CAST(SUM(COUNT(*)) OVER (PARTITION BY transacao_aprovada)
-                AS BIGINT) AS n_resultado,
-           CAST(SUM(COUNT(*)) OVER () AS BIGINT) AS n_total
-    FROM approved
-    GROUP BY modalidade_pagamento, transacao_aprovada
-),
+_CRAMER_CTES = MODALITY_APPROVAL_CELLS_CTE + f""",
 cv_tot AS (
     SELECT CAST(MAX(n_total) AS BIGINT) AS n_total,
            CAST(COUNT(DISTINCT modalidade_pagamento) AS BIGINT) AS r,
            CAST(COUNT(DISTINCT transacao_aprovada) AS BIGINT) AS c
-    FROM cv_cells
+    FROM ma_cells
 ),
 cv_chi AS (
     SELECT {_sql_fold(
@@ -2060,7 +1998,7 @@ cv_chi AS (
         ' / (CAST(n_modalidade AS DOUBLE) * CAST(n_resultado AS DOUBLE)'
         '    / CAST(n_total AS DOUBLE))',
         'chave')} AS qui2
-    FROM cv_cells
+    FROM ma_cells
 )"""
 
 CRAMERS_V_SQL = _oracle_with(
@@ -3177,38 +3115,23 @@ def g_test_modality_approval(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are small or contributions need to add across partitions of
     the table. Per-cell contributions plus the G total.
 
-    Margins are exact integers from ONE cells aggregate; each cell's
+    Cells and margins are exact integers from the shared pinned
+    (modality, approval) contingency kernel; each cell's
     2 O ln(O/E) is transcendental, so it is ROUND(.,6) (the BM25/MI
     precedent) and the G total rides the deterministic sorted fold over
     the cell keys. Zero cells contribute 0 (the lim x->0 x ln x
     convention). Contingency-table-sized at any corpus size."""
-    cells = (
-        _approved(spark, sf_dir)
-        .groupBy("modalidade_pagamento", "transacao_aprovada")
-        .agg(F.count("*").cast("bigint").alias("n_celula"))
-        # pinned (round-14): 4 consumers re-derived _approved (72 scans
-        # before; guide §2.4/§3.3 — after: one subtree, one pass)
-        .localCheckpoint(eager=False)
-    )
-    rows = cells.groupBy("modalidade_pagamento").agg(
-        F.sum("n_celula").cast("bigint").alias("_nr")
-    )
-    cols = cells.groupBy("transacao_aprovada").agg(
-        F.sum("n_celula").cast("bigint").alias("_nc")
-    )
-    total = cells.agg(F.sum("n_celula").cast("bigint").alias("_nt"))
     esp = (
-        F.col("_nr").cast("double") * F.col("_nc").cast("double")
-    ) / F.col("_nt").cast("double")
+        F.col("n_modalidade").cast("double")
+        * F.col("n_resultado").cast("double")
+    ) / F.col("n_total").cast("double")
     o = F.col("n_celula").cast("double")
     contrib = F.when(
         F.col("n_celula") > 0,
         F.round(F.lit(2.0) * o * F.log(o / F.col("_esp")), 6),
     ).otherwise(F.lit(0.0))
     wide = (
-        cells.join(F.broadcast(rows), "modalidade_pagamento")
-        .join(F.broadcast(cols), "transacao_aprovada")
-        .crossJoin(F.broadcast(total))
+        _modality_approval_cells(spark, sf_dir)
         .withColumn("_esp", esp)
         .withColumn("_g", contrib)
         .withColumn(
@@ -3216,7 +3139,6 @@ def g_test_modality_approval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws("|", "modalidade_pagamento",
                         F.col("transacao_aprovada").cast("string")),
         )
-        .persist()
     )
     g_tot = _fold_terms(wide, "_chave", F.col("_g")).withColumnRenamed(
         "_fold", "g_total"
@@ -3231,31 +3153,19 @@ def g_test_modality_approval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GTEST_CTES = f""",
-g_cells AS (
-    SELECT modalidade_pagamento, transacao_aprovada,
-           modalidade_pagamento || '|' || CAST(transacao_aprovada
-                                               AS VARCHAR) AS chave,
-           CAST(COUNT(*) AS BIGINT) AS n_celula,
-           CAST(SUM(COUNT(*)) OVER (PARTITION BY modalidade_pagamento)
-                AS BIGINT) AS nr,
-           CAST(SUM(COUNT(*)) OVER (PARTITION BY transacao_aprovada)
-                AS BIGINT) AS nc,
-           CAST(SUM(COUNT(*)) OVER () AS BIGINT) AS nt
-    FROM approved
-    GROUP BY modalidade_pagamento, transacao_aprovada
-),
+_GTEST_CTES = MODALITY_APPROVAL_CELLS_CTE + f""",
 g_wide AS (
     SELECT *,
-           CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE)
-               / CAST(nt AS DOUBLE) AS esp,
+           CAST(n_modalidade AS DOUBLE) * CAST(n_resultado AS DOUBLE)
+               / CAST(n_total AS DOUBLE) AS esp,
            CASE WHEN n_celula > 0
                 THEN ROUND(2.0 * CAST(n_celula AS DOUBLE)
                            * LN(CAST(n_celula AS DOUBLE)
-                                / (CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE)
-                                   / CAST(nt AS DOUBLE))), 6)
+                                / (CAST(n_modalidade AS DOUBLE)
+                                   * CAST(n_resultado AS DOUBLE)
+                                   / CAST(n_total AS DOUBLE))), 6)
                 ELSE 0.0 END AS g_contrib
-    FROM g_cells
+    FROM ma_cells
 ),
 g_tot AS (SELECT {_sql_fold('g_contrib', 'chave')} AS g_total FROM g_wide)"""
 
@@ -3420,24 +3330,14 @@ def naive_bayes_approval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each log term is transcendental -> ROUND(.,6); the accuracy is an
     exact integer ratio (decisions compare 6-grid sums against 0 — a
     sum of 6-grid decimals is on the grid, never a boundary surprise).
-    Two tiny re-aggregates off ONE (modality, band, y) cells frame."""
-    ap = _approved(spark, sf_dir).select(
-        "modalidade_pagamento",
-        _faixa_valor().alias("faixa_valor"),
-        F.col("transacao_aprovada").cast("int").alias("y"),
-    )
-    cells = (
-        ap.groupBy("modalidade_pagamento", "faixa_valor")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("y").cast("bigint").alias("n_y"),
-        )
-        # pinned (round-14): persist dedup'd execution but the 4
-        # consumers still re-analyzed (and on exchange-reuse misses
-        # re-executed) the _approved subtree (54 scans before; guide
-        # §2.4/§3.3 — after: one subtree, one pass)
-        .localCheckpoint(eager=False)
-    )
+    Tiny re-aggregates off the shared pinned (modality, band) x approval
+    contingency kernel."""
+    cells = _approval_contingency(
+        spark,
+        sf_dir,
+        modalidade_pagamento=F.col("modalidade_pagamento"),
+        faixa_valor=_faixa_valor(),
+    ).select("modalidade_pagamento", "faixa_valor", "n", "n_y")
     mod = cells.groupBy("modalidade_pagamento").agg(
         F.sum("n_y").cast("bigint").alias("_my"),
         F.sum(F.col("n") - F.col("n_y")).cast("bigint").alias("_mn"),
@@ -3498,7 +3398,6 @@ def naive_bayes_approval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "log_odds", F.col("_lm") + F.col("_lf") + F.col("_prior")
         )
         .withColumn("previsto", F.col("log_odds") > F.lit(0.0))
-        .persist()
     )
     acc = wide.agg(
         (

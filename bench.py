@@ -300,6 +300,11 @@ def _warm(spark, queries, sf_dir: str) -> None:
     ITS operator (banding vs brute join), not about who ran first."""
     if "approval_pipeline" in queries:
         queries["approval_pipeline"].fn(spark, sf_dir).count()
+        # the session pin of the scored fact, read by zscore_per_payer,
+        # top_k_recent and most dashboard and stats queries
+        from banking_streaming_etl_spark.plans import dashboard as _dashboard
+
+        _dashboard._approved(spark, sf_dir)
     if "near_dup_jaccard" in queries or "dedup_minhash_lsh" in queries:
         from banking_streaming_etl_spark.operators import dedup as _dedup
 
@@ -319,8 +324,16 @@ def _warm_family_memos(spark, sf_dir: str) -> None:
     paying the shared build."""
     from banking_streaming_etl_spark.plans import behavior as _behavior
     from banking_streaming_etl_spark.plans import dashboard as _dashboard
+    from banking_streaming_etl_spark.plans import stats as _stats
     from banking_streaming_etl_spark.plans import text as _text
 
+    # the scored-fact pin, then the contingency kernel: building a
+    # family member pins its kernel entry — the (modality),
+    # (modality, value band) and (value group) row keys
+    _dashboard._approved(spark, sf_dir)
+    _dashboard.mi_modality_approval(spark, sf_dir)
+    _stats.naive_bayes_approval(spark, sf_dir)
+    _stats.two_proportion_approval_test(spark, sf_dir)
     _dashboard._cal_rank_asc(spark, sf_dir)
     _dashboard._cal_rank_desc(spark, sf_dir)
     _dashboard._modality_value_ranked(spark, sf_dir)

@@ -45,8 +45,8 @@ def test_shared_frame_normalizes_sf_dir_key(spark):
 
 
 def test_shared_frame_nested_builds_do_not_deadlock(spark):
-    """Builders NEST in production (_cal_rank_asc's lambda calls the
-    memoized _cal_scored) — the build lock must be reentrant, and
+    """Builders NEST in production (_cal_rank_asc's lambda reads the
+    memoized scored fact) — the build lock must be reentrant, and
     concurrent same-key callers must still get ONE build."""
     import threading
 

@@ -77,6 +77,85 @@ def test_filter_pushes_through_join_graph(spark):
     assert "In(event_type" in plan
 
 
+#: the reference dashboard's ten analyses (plans.dashboard, 1-10)
+_DASHBOARD_ANALYSES = (
+    "approval_overview",
+    "value_histogram",
+    "density_grid",
+    "hourly_score_approval",
+    "region_approval",
+    "denial_reasons",
+    "denied_by_modality",
+    "tx_per_hour",
+    "distance_bucket_pivot",
+    "freq_per_payer_hour",
+)
+
+#: the modality x approval contingency family (one pinned kernel)
+_CONTINGENCY_FAMILY = (
+    "chi2_cells_modality_approval",
+    "g_test_modality_approval",
+    "cramers_v_modality_approval",
+    "mi_modality_approval",
+    "naive_bayes_approval",
+    "two_proportion_approval_test",
+)
+
+
+def test_dashboard_analyses_read_the_scored_fact_pin(spark):
+    """The ten dashboard analyses read the session pin of the scored
+    fact: no parquet scan and no dimension join is planned per query."""
+    for name in _DASHBOARD_ANALYSES:
+        plan = _physical_plan(_query(spark, name))
+        assert "Scan parquet" not in plan, (name, plan)
+        assert "BroadcastHashJoin" not in plan, (name, plan)
+
+
+def test_scored_fact_build_is_broadcast_only(spark):
+    """The graph behind the pin (and behind filter_membership_range)
+    keeps the flagship shape: three broadcast dimension joins, no
+    shuffle."""
+    import re
+
+    from banking_streaming_etl_spark.plans import dashboard
+
+    plan = _physical_plan(dashboard._approved_build(spark, SF))
+    assert plan.count("BroadcastHashJoin") >= 3, plan
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan
+
+
+def test_contingency_family_rebuilds_run_no_jobs(spark):
+    """Once the contingency kernel is pinned, building any family member
+    again runs no Spark job: no per-call pin or eager aggregate is left
+    in the builders."""
+    sc = spark.sparkContext
+    for name in _CONTINGENCY_FAMILY:
+        _query(spark, name)
+    for name in _CONTINGENCY_FAMILY:
+        before = sc._jsc.sc().dagScheduler().nextJobId()
+        _query(spark, name)
+        assert sc._jsc.sc().dagScheduler().nextJobId() == before, name
+
+
+def test_analyst_session_pins_do_not_grow_across_passes(spark):
+    """Lifecycle: the dashboard's analyses and views plus the
+    contingency family pin their shared frames once per session. A
+    second pass over the same queries adds no persisted RDD — no
+    per-call pin survives its query."""
+    names = (
+        _DASHBOARD_ANALYSES
+        + ("perf_stats_by_modality", "perf_temporal_hourly")
+        + _CONTINGENCY_FAMILY
+    )
+    sc = spark.sparkContext
+    pinned = []
+    for _ in range(2):
+        for name in names:
+            _query(spark, name).collect()
+        pinned.append(len(sc._jsc.getPersistentRDDs()))
+    assert pinned[1] == pinned[0], pinned
+
+
 def test_near_dup_lsh_is_bucketed_not_all_pairs(spark):
     """The 100 TB near-dup path must candidate-generate via the
     (tbl, bucket) equi-join — a CartesianProduct / nested-loop join

@@ -167,6 +167,42 @@ def test_foreach_batch_multisink(spark, replay_dir, tmp_path):
     assert times == sorted(times, reverse=True)
 
 
+def test_failed_sink_write_leaves_recent_view_untouched(
+    spark, replay_dir, tmp_path
+):
+    """The recent view is a side effect of a COMMITTED epoch: when a sink
+    write fails (scores_dir is a regular file, so the scores append
+    cannot create its directory) the query fails and the view stays
+    empty, even though the top-K collect ran concurrently and
+    succeeded."""
+    from pyspark.errors import StreamingQueryException
+
+    tx = stream_src.read_transaction_stream(
+        spark, replay_dir, max_files_per_trigger=2
+    )
+    out = spipe.approval_stream(
+        tx, datamodel.users(spark, SF), datamodel.regions(spark, SF)
+    )
+    scores_file = tmp_path / "scores"
+    scores_file.write_text("not a directory")
+    view = spipe.RecentTransactionsView(capacity=500)
+    q = spipe.start_multi_sink(
+        out,
+        history_dir=str(tmp_path / "hist"),
+        scores_dir=str(scores_file),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        recent_view=view,
+        recent_k=50,
+    )
+    try:
+        with pytest.raises(StreamingQueryException):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert q.exception() is not None
+    assert len(view) == 0
+
+
 def test_streaming_analytics_match_batch(spark, replay_dir):
     """The live analytics (report's production direction) equal the batch
     dashboard queries once the stream is drained."""
