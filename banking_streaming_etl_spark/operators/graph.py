@@ -275,8 +275,9 @@ def payer_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Net: one aggregate job (plus its trivial score-broadcast build) per
     push instead of 3-4 multi-stage AQE jobs. Everything cached is
-    node-/edge-sized (spill-safe); the edge caches are unpersisted when
-    the loop ends (the returned plan reads only checkpointed RDDs)."""
+    node-/edge-sized (spill-safe); the edge caches and every push pin
+    but the last two are released when the loop ends (the returned plan
+    reads only the node checkpoint and those two aggregates)."""
     edges, nodes = _graph(spark, sf_dir)
     edges = edges.persist()
     # one direction-partitioned edge cache per push's GROUP key,
@@ -302,12 +303,14 @@ def payer_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
+    pins = [h_frame]
+
     def _push(src_col: str, dst_col: str, frame: DataFrame) -> DataFrame:
         """One propagation: sum 9-rounded `frame.v` over edges grouped
         by the far endpoint, L1-normalize by the exact decimal total.
         Returns the SPARSE normalized frame (nodes with score 0 are
         simply absent) as a cheap projection over the checkpointed
-        aggregate."""
+        aggregate, whose pin is recorded in `pins`."""
         grouped = by_dst if dst_col == "dst" else by_src
         raw = (
             grouped.join(
@@ -331,6 +334,7 @@ def payer_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             # pair
             .localCheckpoint(eager=False)
         )
+        pins.append(raw)
         tot = raw.agg(F.sum("s")).collect()[0][0]
         tot_d = (F.lit(tot) if tot is not None else F.lit(None)).cast("double")
         return raw.select(
@@ -344,6 +348,11 @@ def payer_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         h_frame = _push("dst", "src", a_frame)
     by_dst.unpersist()
     by_src.unpersist()
+    # every push has run: release the pins the returned plan does not
+    # read — all but the last two push aggregates (under a_frame and
+    # h_frame), the iteration-0 h_frame included
+    for pin in pins[:-2]:
+        pin._jdf.queryExecution().analyzed().rdd().unpersist(False)
     # densify once: the score frames are node-sized projections over the
     # checkpointed push aggregates — attach them under the same
     # $SPARK_GRAFT_GRAPH_PUSH strategy as the loop joins (the planner

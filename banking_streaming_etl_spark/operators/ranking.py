@@ -840,15 +840,11 @@ def overlap_checkpoint(frames: list) -> list:
 
     Spark's scheduler runs concurrent driver-submitted jobs FIFO with
     back-fill (the guide's recommended shape); job descriptions are
-    thread-local so the UI stays readable. Parameterized via
-    $SPARK_GRAFT_RANK_OVERLAP (default on; "0" restores the sequential
-    lazy build for A/B) — like SPARK_GRAFT_RANK_INPUT above.
+    thread-local so the UI stays readable.
 
     Inputs shared by the frames should be materialized (cache/checkpoint)
     by the caller FIRST so the concurrent jobs reuse one copy instead of
     racing to compute it."""
-    if os.environ.get("SPARK_GRAFT_RANK_OVERLAP", "1") == "0":
-        return list(frames)
     if len(frames) < 2:
         return [f.localCheckpoint(eager=True) for f in frames]
     from concurrent.futures import ThreadPoolExecutor

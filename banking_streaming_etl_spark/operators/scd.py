@@ -13,8 +13,9 @@ union + window"):
 - `CdcUpsertSink`: streaming foreachBatch last-write-wins upsert keyed on
   the record id — reduce each micro-batch to one row per key (max_by on
   event time), anti-join the current snapshot, write the union. With the
-  epoch-keyed idempotence pattern of sinks.IdempotentParquetSink this is
-  the JDBC-upsert analogue the reference deferred (PDF p. 8).
+  epoch-keyed idempotence pattern of sinks.write_epoch (behind
+  sinks.IdempotentParquetSink) this is the JDBC-upsert analogue the
+  reference deferred (PDF p. 8).
 """
 
 from __future__ import annotations

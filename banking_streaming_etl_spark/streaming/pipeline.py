@@ -7,7 +7,10 @@ Streaming:
   joins (J1-J3) -> score + approval expressions (F3-F10) -> wide projection
   with processing-time latency columns (P4/F11/F12) -> foreachBatch
   multi-sink (K1): history parquet + scores parquet + recent-transactions
-  KV view, with persist()/unpersist() around the reuse.
+  KV view, with persist()/unpersist() around the reuse. Unlike the
+  reference's at-least-once JDBC appends, history and scores are written
+  epoch-keyed (`sinks.write_epoch`, a trailing `batch_id` partition
+  column), so a retried epoch replaces its rows: effectively-once.
 
 Batch/stream unification: the transform body is the SAME code the batch
 flagship uses (plans/approval.with_scores / with_approval_flags) — written
@@ -28,6 +31,10 @@ from pyspark.sql.streaming import StreamingQuery
 from banking_streaming_etl_spark.plans.approval import (
     with_approval_flags,
     with_scores,
+)
+from banking_streaming_etl_spark.streaming.sinks import (
+    start_foreach_batch,
+    write_epoch,
 )
 
 WATERMARK_DELAY = "10 minutes"  # streaming_etl.py:61
@@ -152,14 +159,17 @@ def start_multi_sink(
     checkpoint_dir: str,
     recent_view: RecentTransactionsView | None = None,
     recent_k: int = 100,
-    trigger: dict | None = None,
 ) -> StreamingQuery:
     """K1: foreachBatch fan-out to history + scores + recent-KV, mirroring
     streaming_etl.py:179-263.
 
     - persist()/unpersist() around the multi-write (streaming_etl.py:180,256)
-    - history parquet append = the JDBC `transacoes` table (K2)
+    - history parquet = the JDBC `transacoes` table (K2)
     - 4-column scores projection = `transacoes_scores` (P5)
+    - both written by `sinks.write_epoch` into their epoch's `batch_id=N`
+      partition: an epoch retried after a failed write (say scores failed
+      after history committed) overwrites its own partitions instead of
+      appending a second copy, so each id lands once in each sink
     - per-batch top-K into the KV view = the Redis zset+hash (K3/K4); the
       collect is bounded by recent_k — never the whole batch — and the
       view is updated only after both sink writes of the epoch succeeded.
@@ -211,13 +221,9 @@ def start_multi_sink(
             # zset) is applied only after both writes succeeded: a
             # failed epoch leaves it untouched, and its retry is what
             # updates it.
-            def _hist() -> None:
-                batch_df.write.mode("append").parquet(history_dir)
-
-            def _scores() -> None:
-                batch_df.select(
-                    "id_transacao", "t5_score", "t6_score", "t7_score"
-                ).write.mode("append").parquet(scores_dir)
+            scores = batch_df.select(
+                "id_transacao", "t5_score", "t6_score", "t7_score"
+            )
 
             def _recent() -> list[dict]:
                 top = (
@@ -239,7 +245,10 @@ def start_multi_sink(
 
             n_jobs = 2 if recent_view is None else 3
             with ThreadPoolExecutor(max_workers=n_jobs) as pool:
-                futs = [pool.submit(_hist), pool.submit(_scores)]
+                futs = [
+                    pool.submit(write_epoch, batch_df, history_dir, epoch_id),
+                    pool.submit(write_epoch, scores, scores_dir, epoch_id),
+                ]
                 if recent_view is not None:
                     futs.append(pool.submit(_recent))
                 errs = []
@@ -255,14 +264,7 @@ def start_multi_sink(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        result_stream.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return start_foreach_batch(result_stream, write_batch, checkpoint_dir)
 
 
 def start_console_metrics(

@@ -2,21 +2,108 @@
 
 The reference's JDBC append inside foreachBatch is at-least-once: a batch
 retried after a sink failure writes its rows twice (acknowledged as
-deferred design work, PDF p. 8). `IdempotentParquetSink` closes that gap
-with the standard epoch-keyed pattern: each micro-batch lands in its own
-`batch_id=N` partition via dynamic-partition overwrite, so a replayed epoch
-OVERWRITES its own partition instead of appending a duplicate. Combined
-with checkpointed offsets this yields effectively-once output — the same
-pattern a JDBC sink would implement with `DELETE WHERE batch_id = N` +
-insert in one transaction.
+deferred design work, PDF p. 8). Every foreachBatch sink of this package
+closes that gap with ONE epoch-keyed writer, `write_epoch`: each
+micro-batch lands in its own `batch_id=N` partition via dynamic-partition
+overwrite, so a replayed epoch OVERWRITES its own partition instead of
+appending a duplicate. Combined with checkpointed offsets this yields
+effectively-once output — the same pattern a JDBC sink would implement
+with `DELETE WHERE batch_id = N` + insert in one transaction.
+
+The writer serves the flagship multi-sink (`pipeline.start_multi_sink`:
+history and scores), `IdempotentParquetSink`, the materialized aggregate
+and join views and the quantile-sketch store; every one of them starts
+through `start_foreach_batch`, and the two views share one crash-safe
+compaction swap (`_compact_epochs` / `_recover_compact`). Readers see the
+epoch as a trailing `batch_id` partition column.
 """
 
 from __future__ import annotations
+
+import glob
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from pyspark.sql.streaming import StreamingQuery
+
+
+def write_epoch(df: DataFrame, path: str, epoch_id: int) -> None:
+    """Land `df` as the `batch_id=epoch_id` partition of the parquet
+    store at `path`, replacing whatever an earlier attempt of the same
+    epoch left there and no other partition."""
+    (
+        df.withColumn("batch_id", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
+def start_foreach_batch(
+    stream: DataFrame, write_batch, checkpoint_dir: str
+) -> StreamingQuery:
+    """Start `stream` with `write_batch(batch_df, epoch_id)` as its
+    foreachBatch sink, its offsets checkpointed at `checkpoint_dir`."""
+    return (
+        stream.writeStream.outputMode("append")
+        .foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
+
+
+def _has_epochs(path: str) -> bool:
+    """True once some epoch committed a part file under `path` — before
+    that a store is legally empty and `spark.read` would fail schema
+    inference on a bare directory."""
+    return bool(glob.glob(os.path.join(path, "batch_id=*", "part-*.parquet")))
+
+
+def _recover_compact(path: str) -> None:
+    """Roll back a `_compact_epochs` that crashed mid-swap: if the live
+    store is gone but its `__old` backup exists, the crash hit between
+    the rename-aside and the promote — restore the backup (a complete
+    copy of the pre-compact state) and drop any stray compacted temp.
+    Without this, the next write would silently recreate an EMPTY store
+    while all prior state sat stranded in `__old`."""
+    backup = path + "__old"
+    if not os.path.exists(path) and os.path.exists(backup):
+        os.rename(backup, path)
+        tmp = path + "__compact"
+        if os.path.exists(tmp):
+            shutil.rmtree(tmp)
+
+
+def _compact_epochs(folded: DataFrame, path: str) -> None:
+    """Replace the epoch-keyed store at `path` by `folded` (its content
+    folded by the caller) as one `batch_id=-1` partition. -1 sorts before
+    every real epoch, and the folded store keeps the partition layout — a
+    mixed layout would make Spark's partition discovery silently drop the
+    root-level file.
+
+    Crash-safe swap: rename the live store aside FIRST, then promote the
+    compacted copy, then drop the backup — at least one complete copy of
+    the state exists at every instant. A crash between the rename-aside
+    and the promote leaves no live dir; `_recover_compact` restores the
+    backup on the next read or write."""
+    tmp = path + "__compact"
+    (
+        folded.drop("batch_id")
+        .withColumn("batch_id", F.lit(-1))
+        .write.mode("overwrite")
+        .partitionBy("batch_id")
+        .parquet(tmp)
+    )
+    backup = path + "__old"
+    if os.path.exists(backup):
+        shutil.rmtree(backup)
+    os.rename(path, backup)
+    shutil.move(tmp, path)
+    shutil.rmtree(backup)
 
 
 class IdempotentParquetSink:
@@ -28,13 +115,7 @@ class IdempotentParquetSink:
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         df = batch_df.select(*self.columns) if self.columns else batch_df
-        (
-            df.withColumn("batch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.out_dir)
-        )
+        write_epoch(df, self.out_dir, epoch_id)
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.out_dir)
@@ -45,17 +126,9 @@ def start_idempotent_sink(
     out_dir: str,
     checkpoint_dir: str,
     columns: list[str] | None = None,
-    trigger: dict | None = None,
 ) -> StreamingQuery:
     sink = IdempotentParquetSink(out_dir, columns)
-    writer = (
-        result_stream.writeStream.outputMode("append")
-        .foreachBatch(sink.write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return start_foreach_batch(result_stream, sink.write_batch, checkpoint_dir)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -104,7 +177,6 @@ def compact_parquet(
     output file so file sizes stay bounded no matter the partition count.
     Returns the number of files written. Deterministic apart from file
     layout; content equality is what the test pins."""
-    import glob
     import math
 
     df = spark.read.parquet(src_path)
@@ -128,7 +200,7 @@ class MaterializedAggregateView:
 
     Additive merges are NOT naturally idempotent (a replayed epoch would
     double-add), so each micro-batch's partial aggregate lands in its own
-    `batch_id=N` partition via dynamic overwrite — the same epoch-keyed
+    `batch_id=N` partition via `write_epoch` — the same epoch-keyed
     pattern as IdempotentParquetSink, applied to aggregate DELTAS instead
     of rows. A replayed epoch overwrites its own delta; the read side
     re-aggregates the (tiny, groups x epochs) delta table. Periodic
@@ -146,43 +218,19 @@ class MaterializedAggregateView:
         self.key_col = key_col
         self.value_col = value_col
 
-    def _recover_interrupted_compact(self) -> None:
-        """Roll back a compact() that crashed mid-swap: if the live view
-        directory is gone but the `__old` backup exists, the crash hit
-        between the rename-aside and the promote — restore the backup
-        (which is a complete copy of the pre-compact state) and drop any
-        stray compacted temp. Without this, the next write_batch would
-        silently recreate an EMPTY view while all prior aggregate state
-        sat stranded in `__old`."""
-        import os
-        import shutil
-
-        backup = self.out_dir + "__old"
-        if not os.path.exists(self.out_dir) and os.path.exists(backup):
-            os.rename(backup, self.out_dir)
-            tmp = self.out_dir + "__compact"
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         from banking_streaming_etl_spark.functions import exact
 
-        self._recover_interrupted_compact()
+        _recover_compact(self.out_dir)
         delta = batch_df.groupBy(self.key_col).agg(
             F.count("*").alias("n_delta"),
             F.sum(exact._d(F.col(self.value_col))).alias("soma_delta"),
         )
-        (
-            delta.withColumn("batch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.out_dir)
-        )
+        write_epoch(delta, self.out_dir, epoch_id)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Fold the deltas into the current view: (key, n, soma)."""
-        self._recover_interrupted_compact()
+        _recover_compact(self.out_dir)
         deltas = spark.read.parquet(self.out_dir)
         return deltas.groupBy(self.key_col).agg(
             F.sum("n_delta").alias("n"),
@@ -197,14 +245,12 @@ class MaterializedAggregateView:
         while the stream is STOPPED at a committed checkpoint. Folding a
         written-but-uncommitted epoch and then replaying it would count
         it twice, and a delta landing between the fold's read and the
-        directory swap would be lost. The folded output keeps the
-        batch_id partition layout — a mixed layout would make Spark's
-        partition discovery silently drop the root-level file."""
+        directory swap would be lost."""
         # a retried compact after a mid-swap crash must restore the
         # backup first, like read()/write_batch() do — otherwise the
         # spark.read below hits the missing live dir and raises instead
         # of recovering
-        self._recover_interrupted_compact()
+        _recover_compact(self.out_dir)
         folded = (
             spark.read.parquet(self.out_dir)
             .groupBy(self.key_col)
@@ -212,26 +258,8 @@ class MaterializedAggregateView:
                 F.sum("n_delta").alias("n_delta"),
                 F.sum("soma_delta").alias("soma_delta"),
             )
-            .withColumn("batch_id", F.lit(-1))
         )
-        tmp = self.out_dir + "__compact"
-        folded.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-        import os
-        import shutil
-
-        # crash-safe swap: rename the live view aside FIRST, then promote
-        # the compacted copy, then drop the backup — at least one complete
-        # copy of the aggregate state exists at every instant (a crash
-        # between rmtree and move would otherwise lose the whole view).
-        # A crash BETWEEN the rename-aside and the promote leaves no live
-        # dir; _recover_interrupted_compact restores the backup on the
-        # next read/write_batch, so that window is covered too.
-        backup = self.out_dir + "__old"
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        os.rename(self.out_dir, backup)
-        shutil.move(tmp, self.out_dir)
-        shutil.rmtree(backup)
+        _compact_epochs(folded, self.out_dir)
 
 
 def start_materialized_view(
@@ -240,17 +268,9 @@ def start_materialized_view(
     checkpoint_dir: str,
     key_col: str = "modalidade_pagamento",
     value_col: str = "valor_transacao",
-    trigger: dict | None = None,
 ) -> StreamingQuery:
     view = MaterializedAggregateView(out_dir, key_col, value_col)
-    writer = (
-        tx_stream.writeStream.outputMode("append")
-        .foreachBatch(view.write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return start_foreach_batch(tx_stream, view.write_batch, checkpoint_dir)
 
 
 class QuantileSketchStore:
@@ -312,14 +332,7 @@ class QuantileSketchStore:
             (F.col("valor_transacao") + F.lit(0.0)).alias("v"),
             portable.lcg_hash(F.col("id_transacao")).alias("h"),
         )
-        (
-            self._bottom_q(rows)
-            .withColumn("batch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.out_dir)
-        )
+        write_epoch(self._bottom_q(rows), self.out_dir, epoch_id)
 
     def read_sample(self, spark: SparkSession) -> DataFrame:
         """The live merged sample: re-truncate the union of all epoch
@@ -329,11 +342,7 @@ class QuantileSketchStore:
         empty — return an explicitly-schemed empty sample instead of
         letting spark.read fail schema inference on a bare directory
         (round-13 advice: this store gets polled mid-stream)."""
-        import glob
-        import os
-
-        if not glob.glob(os.path.join(self.out_dir, "batch_id=*",
-                                      "part-*.parquet")):
+        if not _has_epochs(self.out_dir):
             return spark.createDataFrame(
                 [],
                 "modalidade_pagamento string, tid bigint, "
@@ -355,20 +364,10 @@ class QuantileSketchStore:
 
 
 def start_quantile_sketch_store(
-    tx_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
+    tx_stream: DataFrame, out_dir: str, checkpoint_dir: str
 ) -> StreamingQuery:
     store = QuantileSketchStore(out_dir)
-    writer = (
-        tx_stream.writeStream.outputMode("append")
-        .foreachBatch(store.write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return start_foreach_batch(tx_stream, store.write_batch, checkpoint_dir)
 
 
 class MaterializedJoinView:
@@ -405,30 +404,10 @@ class MaterializedJoinView:
     """
 
     def __init__(self, out_dir: str, on: str):
-        import os
-
         self.left_dir = os.path.join(out_dir, "left")
         self.right_dir = os.path.join(out_dir, "right")
         self.view_dir = os.path.join(out_dir, "view")
         self.on = on
-
-    @staticmethod
-    def _epoch_keyed_write(df: DataFrame, path: str, epoch_id: int) -> None:
-        (
-            df.withColumn("batch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    @staticmethod
-    def _committed(path: str) -> bool:
-        import glob
-        import os
-
-        return bool(glob.glob(os.path.join(path, "batch_id=*",
-                                           "part-*.parquet")))
 
     def _history(
         self, spark: SparkSession, path: str, like: DataFrame,
@@ -436,7 +415,7 @@ class MaterializedJoinView:
     ) -> DataFrame:
         """Input partitions with batch_id < N (or <= N) — `like.limit(0)`
         stands in before the first commit (same schema, zero rows)."""
-        if not self._committed(path):
+        if not _has_epochs(path):
             return like.limit(0)
         cut = (F.col("batch_id") <= before) if inclusive else (
             F.col("batch_id") < before)
@@ -449,9 +428,9 @@ class MaterializedJoinView:
         Column contract: the two sides share ONLY the join key."""
         spark = left_delta.sparkSession
         n = int(epoch_id)
-        self._recover_interrupted_compact()
-        self._epoch_keyed_write(left_delta, self.left_dir, n)
-        self._epoch_keyed_write(right_delta, self.right_dir, n)
+        self._recover()
+        write_epoch(left_delta, self.left_dir, n)
+        write_epoch(right_delta, self.right_dir, n)
         right_upto = self._history(
             spark, self.right_dir, right_delta, n, inclusive=True)
         left_before = self._history(
@@ -459,13 +438,13 @@ class MaterializedJoinView:
         view_delta = left_delta.join(right_upto, self.on).unionByName(
             left_before.join(right_delta, self.on)
         )
-        self._epoch_keyed_write(view_delta, self.view_dir, n)
+        write_epoch(view_delta, self.view_dir, n)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The current view: a plain scan (deltas are disjoint rows).
         Legally empty before the first committed epoch."""
-        self._recover_interrupted_compact()
-        if not self._committed(self.view_dir):
+        self._recover()
+        if not _has_epochs(self.view_dir):
             raise ValueError(
                 "MaterializedJoinView.read before any committed epoch — "
                 "the view schema is defined by the inputs; poll after "
@@ -473,22 +452,11 @@ class MaterializedJoinView:
             )
         return spark.read.parquet(self.view_dir).drop("batch_id")
 
-    def _recover_interrupted_compact(self) -> None:
+    def _recover(self) -> None:
         """Roll back a compact() that crashed mid-swap on any of the
-        three directories (same recovery law as
-        MaterializedAggregateView: live dir gone + `__old` backup
-        present means the crash hit between rename-aside and promote —
-        restore the backup, drop any stray temp)."""
-        import os
-        import shutil
-
+        three stores."""
         for path in (self.left_dir, self.right_dir, self.view_dir):
-            backup = path + "__old"
-            if not os.path.exists(path) and os.path.exists(backup):
-                os.rename(backup, path)
-                tmp = path + "__compact"
-                if os.path.exists(tmp):
-                    shutil.rmtree(tmp)
+            _recover_compact(path)
 
     def compact(self, spark: SparkSession) -> None:
         """Fold every epoch partition of the input stores AND the view
@@ -504,26 +472,10 @@ class MaterializedJoinView:
         written-but-uncommitted epoch folded here and then replayed
         would recompute its view delta against history that already
         contains it."""
-        import os
-        import shutil
-
-        self._recover_interrupted_compact()
+        self._recover()
         for path in (self.left_dir, self.right_dir, self.view_dir):
-            if not self._committed(path):
-                continue
-            folded = (
-                spark.read.parquet(path)
-                .drop("batch_id")
-                .withColumn("batch_id", F.lit(-1))
-            )
-            tmp = path + "__compact"
-            folded.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-            backup = path + "__old"
-            if os.path.exists(backup):
-                shutil.rmtree(backup)
-            os.rename(path, backup)
-            shutil.move(tmp, path)
-            shutil.rmtree(backup)
+            if _has_epochs(path):
+                _compact_epochs(spark.read.parquet(path), path)
 
 
 def start_materialized_join_view(
@@ -531,7 +483,6 @@ def start_materialized_join_view(
     out_dir: str,
     checkpoint_dir: str,
     alert_value: float = 220.0,
-    trigger: dict | None = None,
 ) -> StreamingQuery:
     """The concrete banking face of the delta-join view: every
     transaction paired with every HIGH-VALUE alert by the same payer —
@@ -555,11 +506,4 @@ def start_materialized_join_view(
         )
         view.write_batch(left, right, epoch_id)
 
-    writer = (
-        tx_stream.writeStream.outputMode("append")
-        .foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return start_foreach_batch(tx_stream, _write, checkpoint_dir)

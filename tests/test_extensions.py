@@ -541,6 +541,20 @@ def test_graph_push_modes_identical(spark, monkeypatch):
     assert results["bcast"] == results["shuffle"]
 
 
+def test_payer_hits_releases_superseded_push_pins(spark):
+    """Lifecycle: every HITS push pins its aggregate, but once the loop
+    has run only the pins the returned plan reads may survive — the node
+    checkpoint and the last two push aggregates (under the authority and
+    hub frames). The first call warms the session's shared inputs."""
+    from banking_streaming_etl_spark.operators import graph
+
+    sc = spark.sparkContext
+    graph.payer_hits(spark, SF).collect()
+    before = len(sc._jsc.getPersistentRDDs())
+    graph.payer_hits(spark, SF).collect()
+    assert len(sc._jsc.getPersistentRDDs()) - before <= 1 + 2
+
+
 def test_pagerank_sanity(spark):
     """Rank mass and ordering sanity: every rank >= the teleport floor,
     hubs (recipients with many distinct payers) outrank leaves, and the

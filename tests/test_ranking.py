@@ -407,12 +407,12 @@ def test_input_lineage_modes_identical(spark, monkeypatch):
     assert results["persist"] == results["plain"]
 
 
-def test_overlap_checkpoint_modes_identical(spark, monkeypatch):
-    """The $SPARK_GRAFT_RANK_OVERLAP knob (round-14 optimization:
-    concurrent eager materialization of independent ranking passes, guide
-    §2.6) must not move a single value — the overlapped checkpointed
-    frames carry exactly the rows the sequential lazy build produces,
-    for any number of frames (the <2 eager path included)."""
+def test_overlap_checkpoint_modes_identical(spark):
+    """overlap_checkpoint (round-14 optimization: concurrent eager
+    materialization of independent ranking passes, guide §2.6) must not
+    move a single value — the overlapped checkpointed frames carry
+    exactly the rows the sequential lazy build produces, for any number
+    of frames (the <2 eager path included)."""
     df = _tx_values(spark)
     passes = [
         ranking.with_global_row_number(
@@ -425,11 +425,7 @@ def test_overlap_checkpoint_modes_identical(spark, monkeypatch):
             df, "v", "i", "v", out="c", rows_per_bucket=7
         ).select("i", "c"),
     ]
-    monkeypatch.setenv("SPARK_GRAFT_RANK_OVERLAP", "0")
-    plain = ranking.overlap_checkpoint(passes)
-    assert plain == passes  # off = passthrough, no checkpoint, no job
     want = [sorted(tuple(r) for r in f.collect()) for f in passes]
-    monkeypatch.setenv("SPARK_GRAFT_RANK_OVERLAP", "1")
     got3 = ranking.overlap_checkpoint(passes)
     assert [sorted(tuple(r) for r in f.collect()) for f in got3] == want
     got1 = ranking.overlap_checkpoint(passes[:1])
