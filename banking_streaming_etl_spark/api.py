@@ -117,7 +117,7 @@ MEMOIZED_QUERIES = frozenset({
     "quantile_sketch_range",
     # round-14 (optimization): the per-build eager checkpoint pins added
     # for lineage truncation / pass overlap became session memos
-    # (memo.shared_frame/shared_frames) — without the memo every plan
+    # (memo.shared_frame/memo.shared) — without the memo every plan
     # build re-ran 13-60 materialization jobs AND pinned a fresh
     # session-lifetime checkpoint copy (caught by the builder-job guard)
     "spearman_value_score",

@@ -29,11 +29,10 @@ Reference contracts mirrored here:
 
 from __future__ import annotations
 
-import os
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from banking_streaming_etl_spark.operators import memo
 
 TABLES = (
     "region",
@@ -87,56 +86,15 @@ _TS_COLUMNS = {
 }
 
 
-#: per-application memo of loaded-table DataFrames. `spark.read.parquet`
-#: pays file listing + footer schema inference on EVERY call (~0.2-0.3 s
-#: of driver time per table), and a typical query build loads 2-4
-#: tables — so a 50-query sweep re-paid seconds of pure metadata work
-#: per query. The memo returns the SAME (immutable) DataFrame object per
-#: (application, sf_dir, table): identical logical plan, zero semantic
-#: change, and downstream cache-manager lookups dedup faster because the
-#: scan subtrees are reference-equal. Keyed + evicted exactly like
-#: operators/memo.shared_frame (stale applications dropped on access).
-_LOADED: dict[tuple[str, str, str], DataFrame] = {}
-_LOADED_LOCK = threading.RLock()
-
-
-def frame_memo(spark, sf_dir, kind, build):
-    """Session-lifetime memo of a derived DataFrame OBJECT — no
-    materialization, no checkpoint, just reuse of the (immutable)
-    lazy plan. Re-building a shared derivation per query costs py4j
-    roundtrips plus eager re-ANALYSIS of the whole subtree on every
-    intermediate Dataset (~0.5-2 s of driver time per query build for
-    the enrich+score graph); returning the same object makes repeat
-    builds free and lets the cache manager dedup by reference. Values
-    are untouched: callers get the identical logical plan they would
-    have built. Keyed + evicted like operators/memo.shared_frame."""
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.normpath(sf_dir),
-        kind,
-    )
-    with _LOADED_LOCK:
-        for k in [k for k in _LOADED if k[0] != key[0]]:
-            _LOADED.pop(k)
-        cached = _LOADED.get(key)
-        if cached is None:
-            cached = build()
-            _LOADED[key] = cached
-        return cached
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.normpath(sf_dir),
-        name,
-    )
-    with _LOADED_LOCK:
-        for k in [k for k in _LOADED if k[0] != key[0]]:
-            _LOADED.pop(k)
-        cached = _LOADED.get(key)
-        if cached is not None:
-            return cached
+    """Read one testdata table with its timestamps normalized (see
+    _TS_COLUMNS). Session-memoized as the ``table:<name>`` entry of
+    operators/memo.shared: `spark.read.parquet` pays file listing +
+    footer schema inference on EVERY call (~0.2-0.3 s of driver time
+    per table) and a typical query build loads 2-4 tables, so every
+    later call returns the SAME (immutable) DataFrame object."""
+
+    def _build() -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # hour()/date_trunc() must agree with DuckDB's UTC-naive timestamps
         # even when the caller (e.g. the verify driver) built its own
@@ -153,8 +111,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 # naive micros; session tz is UTC so this cast is
                 # value-preserving
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
-        _LOADED[key] = df
         return df
+
+    return memo.shared(spark, sf_dir, f"table:{name}", _build)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -190,7 +149,7 @@ def transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").alias("valor_transacao"),
         )
 
-    return frame_memo(spark, sf_dir, "derived:transactions", _build)
+    return memo.shared(spark, sf_dir, "derived:transactions", _build)
 
 
 def users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -278,7 +237,7 @@ def enrich(tx: DataFrame, u: DataFrame, reg: DataFrame) -> DataFrame:
 
 def enriched_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch flavor of `enrich` over the canonical entities."""
-    return frame_memo(
+    return memo.shared(
         spark,
         sf_dir,
         "derived:enriched",

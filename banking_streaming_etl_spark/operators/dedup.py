@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from banking_streaming_etl_spark import datamodel
 from banking_streaming_etl_spark.functions import portable, textfns
+from banking_streaming_etl_spark.operators import memo
 
 SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.8
@@ -89,34 +90,24 @@ def doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped cache of derived shingle frames, keyed (app_id, sf_dir,
-#: kind). Returning the SAME DataFrame object guarantees a single
-#: InMemoryRelation (plan-identity, not CacheManager plan-equality luck):
-#: - "hashes": the tokenize+explode+distinct scan both dedup twins, doc
-#:   novelty and the cluster pipeline read — runs once per session.
-#: - "sizes": the per-doc shingle counts both twins' Jaccard verification
-#:   needs — one tiny frame instead of one aggregate pass per query.
-#: - "banded": the 16-agg MinHash signature pipeline, banded — memoizing
-#:   it also stops the old per-call cache() from leaking a new
-#:   InMemoryRelation on every dedup_minhash_lsh/dedup_clusters build.
-_SHARED_SHINGLES: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _shared(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    # evict entries from other (stopped) sessions: their cached plans are
-    # unusable through this session, and keeping them would pin dead
-    # InMemoryRelation references for the life of the process. Entries for
-    # OTHER sf_dirs of the live session are kept on purpose (bench walks
-    # two sf dirs in one session).
-    for key in [k for k in _SHARED_SHINGLES if k[0] != app_id]:
-        _SHARED_SHINGLES.pop(key)
-    key = (app_id, sf_dir, kind)
-    df = _SHARED_SHINGLES.get(key)
-    if df is None:
-        df = build().cache()
-        _SHARED_SHINGLES[key] = df
-    return df
+    """Session-shared derived shingle frame (operators/memo.shared under
+    ``shingles:<kind>``, ``.cache()``d). Returning the SAME DataFrame
+    object guarantees a single InMemoryRelation (plan-identity, not
+    CacheManager plan-equality luck):
+
+    - "hashes": the tokenize+explode+distinct scan both dedup twins, doc
+      novelty and the cluster pipeline read — runs once per session.
+    - "sizes": the per-doc shingle counts both twins' Jaccard
+      verification needs — one tiny frame instead of one aggregate pass
+      per query.
+    - "banded": the 16-agg MinHash signature pipeline, banded —
+      memoizing it also stops the old per-call cache() from leaking a
+      new InMemoryRelation on every dedup_minhash_lsh/dedup_clusters
+      build."""
+    return memo.shared(
+        spark, sf_dir, f"shingles:{kind}", lambda: build().cache()
+    )
 
 
 def shared_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,6 +28,7 @@ from pyspark.sql import Window as W
 
 from banking_streaming_etl_spark import datamodel
 from banking_streaming_etl_spark.functions import exact
+from banking_streaming_etl_spark.operators import memo
 
 
 def _exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -641,29 +642,21 @@ def covariance_moments(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     return prods, sums
 
 
-#: session-scoped memo of the fitted PCA model, keyed (app_id, sf_dir) —
-#: the two full-corpus moment jobs run once per session, not once per
-#: pca_embeddings/pca_project plan build (same eviction rule as
-#: similarity._SHARED_EMB; round-5 verdict task #5's memo half —
-#: registration cost is handled by EAGER_QUERIES membership).
-_PCA_FIT_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def pca_fit(spark: SparkSession, sf_dir: str) -> tuple:
     """Fit PCA over the embeddings table: distributed moments -> D x D
     covariance C = (S - n * mu mu^T) / (n - 1) assembled on the DRIVER
     (D^2 floats — the MODEL, not the data; same driver-holds-the-model
     stance as the BPE merge table) -> numpy eigendecomposition. Returns
-    (eigenvalues desc, components [k x D], mean vector, n); memoized
-    per (session, sf_dir)."""
-    import numpy as np
+    (eigenvalues desc, components [k x D], mean vector, n), memoized per
+    (session, sf_dir) by operators/memo.shared: the two full-corpus
+    moment jobs run once per session, not once per
+    pca_embeddings/pca_project plan build (registration cost is handled
+    by EAGER_QUERIES membership)."""
+    return memo.shared(spark, sf_dir, "pca_fit", lambda: _pca_fit(spark, sf_dir))
 
-    app_id = spark.sparkContext.applicationId
-    for key in [k for k in _PCA_FIT_MEMO if k[0] != app_id]:
-        _PCA_FIT_MEMO.pop(key)
-    memo_key = (app_id, sf_dir)
-    if memo_key in _PCA_FIT_MEMO:
-        return _PCA_FIT_MEMO[memo_key]
+
+def _pca_fit(spark: SparkSession, sf_dir: str) -> tuple:
+    import numpy as np
 
     emb = datamodel.load_table(spark, sf_dir, "embeddings")
     prods, sums = covariance_moments(emb)
@@ -678,9 +671,7 @@ def pca_fit(spark: SparkSession, sf_dir: str) -> tuple:
     cov = (s - n * np.outer(mu, mu)) / (n - 1)
     w, v = np.linalg.eigh(cov)
     order = np.argsort(w)[::-1]
-    fit = (w[order], v[:, order].T, mu, n)
-    _PCA_FIT_MEMO[memo_key] = fit
-    return fit
+    return (w[order], v[:, order].T, mu, n)
 
 
 def pca_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from banking_streaming_etl_spark import datamodel
+from banking_streaming_etl_spark.operators import memo
 
 PAGERANK_ITERS = 6
 DAMPING = 0.85  # exactly representable choices keep both engines aligned
@@ -352,7 +353,7 @@ def payer_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read — all but the last two push aggregates (under a_frame and
     # h_frame), the iteration-0 h_frame included
     for pin in pins[:-2]:
-        pin._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        memo.pinned_rdd(pin).unpersist(False)
     # densify once: the score frames are node-sized projections over the
     # checkpointed push aggregates — attach them under the same
     # $SPARK_GRAFT_GRAPH_PUSH strategy as the loop joins (the planner

@@ -1,61 +1,107 @@
-"""Session-lifetime memo for expensive derivations shared by a FAMILY
-of registered queries (the generalization of
-operators/dedup._SHARED_SHINGLES and
-operators/similarity._SHARED_EMB).
+"""The session memo: the ONE store for every derivation shared across
+the queries of a session.
 
-Several query families re-derive the same intermediate frame when run
-in one session — the Kaplan-Meier risk table (conversion curve +
-Greenwood variance), the min-max-scored + globally-ranked calibration
-frame (ECE/MCE/Brier, reliability deciles, ROC deciles), the
-per-modality exact medians (Brown-Forsythe, exact percentiles). Each
-derivation is itself a multi-stage pipeline (grouped distributed
-ranking = count/sample/bucket/offset stages), so re-deriving it per
-query multiplies the most expensive stages of the session.
+Each entry is keyed (application, normalized sf_dir, kind) and holds
+whatever its ``build`` returned — a loaded table, a lazy derived plan,
+a pinned frame, a list of pinned frames, a driver-side model tuple.
+The store never materializes anything itself: each caller picks its
+pin kind inside its ``build`` lambda, because the right kind depends on
+the derivation:
 
-The memo returns the SAME DataFrame object per (session, sf_dir, kind)
-key, materialized ONCE via an eager ``localCheckpoint``:
+- no materialization (``datamodel.load_table``, the derived
+  enrich/score plans): the value is the immutable lazy DataFrame
+  object. Re-reading a table pays file listing + footer inference
+  (~0.2-0.3 s of driver time per table) and rebuilding the enrich+score
+  graph pays py4j roundtrips plus re-analysis (~0.5-2 s per build);
+  returning the same object skips both and lets the cache manager
+  dedup scans by reference;
+- ``.cache()`` (the shared shingle scans, the normed embeddings, the
+  bloom probe frame): one InMemoryRelation per key instead of one
+  leaked cache per operator call; bench's EXTRA sweep may evict it;
+- eager ``localCheckpoint`` (:func:`shared_frame` and the family
+  builders that return lists of checkpointed frames): the frame
+  survives ``spark.catalog.clearCache()``, so a family of queries
+  never re-derives its shared frame after bench's between-query
+  eviction. Eager, because a lazy pin materializes mid-pipeline and
+  the build's own stages re-derive the upstream DAG (the round-7
+  `interarrival_percentiles_by_modality` lesson). The pinned frames are
+  tiny (a KM risk table, G grouped medians) or narrow projections;
+  lineage truncation is the documented graph.py trade — at cluster
+  scale prefer reliable checkpointing for multi-hour sessions.
 
-- eager: the internal stages of the build pipeline never re-derive the
-  upstream DAG (a lazy ``persist`` materializes mid-pipeline — the
-  round-7 `interarrival_percentiles_by_modality` lesson);
-- localCheckpoint (not ``cache``): the frame survives
-  ``spark.catalog.clearCache()`` — bench's EXTRA sweep evicts
-  accumulated per-query persists between queries, and the shared
-  family frames must NOT be re-computed by every family member after
-  each eviction. The checkpointed frames are tiny (risk table ~
-  |distinct durations| rows; grouped medians ~ G rows) or
-  narrow-column corpus projections, so pinning them for the session is
-  bounded;
-- lineage truncation is the documented graph.py tradeoff: on executor
-  loss the frame recomputes from the checkpoint's parent only in local
-  mode semantics; at cluster scale prefer reliable checkpointing for
-  multi-hour sessions.
-
-Entries from stopped sessions are evicted on access (their checkpointed
-RDDs are unusable through the live session); entries for other sf_dirs
-of the live session are kept on purpose — bench walks two sf dirs in
-one session.
+Entries of stopped applications are evicted on access (their plans and
+blocks are unusable through the live session); entries for other
+sf_dirs of the live session are kept on purpose — bench walks two sf
+dirs in one session.
 """
 
 from __future__ import annotations
 
 import os
 import threading
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-_SHARED: dict[tuple[str, str, str], DataFrame | list[DataFrame]] = {}
+T = TypeVar("T")
+
+_SHARED: dict[tuple[str, str, str], object] = {}
 # Per-key RLocks (created under the global bookkeeping lock): builders
-# of DIFFERENT (sf_dir, kind) keys must not serialize behind one slow
-# eager build, while same-key callers still wait-and-reuse. RLock, not
-# Lock, per key: builders NEST (e.g. the cal_rank_asc build lambda
-# reads the memoized scored fact) — a non-reentrant lock would
-# self-deadlock on the same thread. Nesting across keys is acyclic
-# (a build only calls shared_frame for its own upstream), so per-key
-# locks cannot deadlock each other.
+# of DIFFERENT keys must not serialize behind one slow eager build,
+# while same-key callers still wait-and-reuse. RLock, not Lock, per
+# key: builders NEST (the `derived:enriched` build loads tables, the
+# cal_rank_asc build reads the pinned scored fact) — a non-reentrant
+# lock would self-deadlock on the same thread. Nesting across keys is
+# acyclic (a build only reads its own upstream), so per-key locks
+# cannot deadlock each other.
 _LOCKS: dict[tuple[str, str, str], threading.RLock] = {}
 _LOCK = threading.RLock()  # guards _SHARED/_LOCKS bookkeeping only
+
+
+def shared(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    build: Callable[[], T],
+) -> T:
+    """Return the session-lifetime value for (sf_dir, kind), running
+    ``build()`` on first access and returning the SAME object after.
+
+    The key is path-normalized ('/x' and '/x/' share one entry) and the
+    build/insert is serialized under a PER-KEY lock so concurrent query
+    threads (foreachBatch workers, a parallel test runner) can't
+    double-build — a duplicate pin would hold a second session-lifetime
+    copy. The per-key lock is held across the build on purpose: the
+    second caller of the SAME key waits for (and reuses) the first
+    build, while builders of different keys proceed concurrently."""
+    key = (
+        spark.sparkContext.applicationId,
+        os.path.normpath(sf_dir),
+        kind,
+    )
+    with _LOCK:
+        # Evict only the _SHARED values of stale applications; _LOCKS
+        # entries stay. A builder thread of the old app may still hold
+        # its per-key lock (captured via setdefault before this
+        # eviction) — popping the lock would hand a FRESH lock to the
+        # next same-key caller and let two builds run concurrently. Lock
+        # objects are tiny; keys are bounded by (apps seen in-process) x
+        # (sf dirs) x (kinds).
+        for k in [k for k in _SHARED if k[0] != key[0]]:
+            _SHARED.pop(k)
+        if key in _SHARED:
+            return _SHARED[key]
+        key_lock = _LOCKS.setdefault(key, threading.RLock())
+    with key_lock:
+        # re-check under the key lock: a concurrent same-key caller may
+        # have finished the build while this thread waited
+        with _LOCK:
+            if key in _SHARED:
+                return _SHARED[key]
+        value = build()
+        with _LOCK:
+            _SHARED[key] = value
+        return value
 
 
 def shared_frame(
@@ -64,82 +110,17 @@ def shared_frame(
     kind: str,
     build: Callable[[], DataFrame],
 ) -> DataFrame:
-    """Return the session-lifetime shared frame for (sf_dir, kind),
-    building + eagerly materializing it on first access.
-
-    The key is path-normalized ('/x' and '/x/' share one entry) and the
-    build/insert is serialized under a PER-KEY lock so concurrent query
-    threads (foreachBatch workers, a parallel test runner) can't
-    double-build — a duplicate checkpoint would pin a second
-    session-lifetime copy. The per-key lock is held across the eager
-    build on purpose: the second caller of the SAME key must WAIT for
-    (and reuse) the first materialization, while builders of different
-    keys proceed concurrently."""
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.normpath(sf_dir),
-        kind,
+    """:func:`shared` of ``build()`` pinned by an eager
+    ``localCheckpoint`` — the family-derivation pin."""
+    return shared(
+        spark, sf_dir, kind, lambda: build().localCheckpoint(eager=True)
     )
-    with _LOCK:
-        # Evict only the _SHARED frames of stale applications; _LOCKS
-        # entries stay. A builder thread of the old app may still hold
-        # its per-key lock (captured via setdefault before this
-        # eviction) — popping the lock would hand a FRESH lock to the
-        # next same-key caller and let two builds run concurrently,
-        # pinning the duplicate session-lifetime checkpoint the lock
-        # exists to prevent. Lock objects are tiny; keys are bounded by
-        # (apps seen in-process) x (sf dirs) x (kinds).
-        for k in [k for k in _SHARED if k[0] != key[0]]:
-            _SHARED.pop(k)
-        df = _SHARED.get(key)
-        if df is not None:
-            return df
-        key_lock = _LOCKS.setdefault(key, threading.RLock())
-    with key_lock:
-        # re-check under the key lock: a concurrent same-key caller may
-        # have finished the build while this thread waited
-        with _LOCK:
-            df = _SHARED.get(key)
-        if df is None:
-            df = build().localCheckpoint(eager=True)
-            with _LOCK:
-                _SHARED[key] = df
-        return df
 
 
-def shared_frames(
-    spark: SparkSession,
-    sf_dir: str,
-    kind: str,
-    build: Callable[[], list[DataFrame]],
-) -> list[DataFrame]:
-    """Plural variant of :func:`shared_frame` for builders whose
-    expensive derivation is a LIST of frames materialized together
-    (typically via ``ranking.overlap_checkpoint`` so the independent
-    passes back-fill one another — guide §2.6). Unlike the scalar form,
-    ``build`` is responsible for materialization (it usually already
-    returns eager localCheckpoints); the list is stored verbatim under
-    ``kind`` and the SAME list is returned on every later call, making
-    every rebuild of the owning query job-free (round-14: per-build
-    eager pins re-ran 13-60 jobs per plan build AND pinned a fresh
-    session-lifetime checkpoint copy each time)."""
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.normpath(sf_dir),
-        kind,
-    )
-    with _LOCK:
-        for k in [k for k in _SHARED if k[0] != key[0]]:
-            _SHARED.pop(k)
-        dfs = _SHARED.get(key)
-        if dfs is not None:
-            return list(dfs)
-        key_lock = _LOCKS.setdefault(key, threading.RLock())
-    with key_lock:
-        with _LOCK:
-            dfs = _SHARED.get(key)
-        if dfs is None:
-            dfs = build()
-            with _LOCK:
-                _SHARED[key] = dfs
-        return list(dfs)
+def pinned_rdd(df: DataFrame):
+    """The JVM RDD holding a ``localCheckpoint``'d frame's blocks: the
+    checkpointed Dataset's analyzed plan IS the LogicalRDD over it. It
+    is the only handle through which the blocks can be released
+    (``pinned_rdd(df).unpersist(False)``); a later action on a plan
+    that reads a released pin fails loudly."""
+    return df._jdf.queryExecution().analyzed().rdd()

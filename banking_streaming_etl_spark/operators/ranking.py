@@ -49,7 +49,6 @@ distributed exact equivalent.
 
 from __future__ import annotations
 
-import os
 import threading
 from collections import OrderedDict
 
@@ -58,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from banking_streaming_etl_spark.functions import portable
+from banking_streaming_etl_spark.operators import memo
 
 #: sampled-boundary budget (shared shape with equidepth_histogram_approx):
 #: expected sample size min(16 * ceil(sqrt(N)), 65536).
@@ -71,22 +71,21 @@ RANK_BUCKET_CAP = 4096
 
 
 #: LRU bound on the per-build input checkpoint pins (round-15; the
-#: round-14 verdict's "what's wrong" #3). Every `ckpt`-mode ranking
-#: build pins one corpus-sized keyed input for the session
-#: (localCheckpoint blocks survive clearCache by design), so a
-#: long-lived session running many ranking builds accumulates
-#: unevictable executor storage. The registry below keeps the newest
-#: $SPARK_GRAFT_RANK_PIN_CAP pins (default 64) and unpersists the
-#: OLDEST beyond that. The trade, stated plainly: a lineage-truncated
-#: frame whose pin was evicted cannot be recomputed — a LATER action on
-#: a stale ranking DataFrame (older than cap newer builds) fails LOUDLY
-#: with Spark's "checkpoint block not found" error, never silently.
-#: Sessions that hold many live lazy ranking plans (e.g. hundreds of
-#: registered ranking views queried much later) must raise the cap
-#: (0 = uncapped, the round-14 behavior) or select
-#: SPARK_GRAFT_RANK_INPUT=persist (evictable AND recomputable — no
-#: eviction hazard, at the re-analysis cost measured in round 14).
-#: Recovery story: SCALING.md "Lineage-truncation pins".
+#: round-14 verdict's "what's wrong" #3). Every ranking build pins one
+#: corpus-sized keyed input for the session (localCheckpoint blocks
+#: survive clearCache by design), so a long-lived session running many
+#: ranking builds would accumulate unevictable executor storage. The
+#: registry below keeps the newest RANK_PIN_CAP pins and unpersists the
+#: OLDEST beyond that. Registering every non-eager view of the registry
+#: at sf0.001 creates 36 pins. The trade, stated plainly: a
+#: lineage-truncated frame whose pin was evicted cannot be recomputed —
+#: a LATER action on a ranking DataFrame built more than RANK_PIN_CAP
+#: ranking builds ago fails LOUDLY, never silently: "Checkpoint block
+#: ... not found" if the plan ran before the eviction, "Storage level
+#: ... is not appropriate for local checkpointing" if it never ran
+#: (tests/test_ranking.py). Recovery story: SCALING.md
+#: "Lineage-truncation pins".
+RANK_PIN_CAP = 64
 _PIN_LRU: OrderedDict[tuple[str, int], object] = OrderedDict()
 _PIN_LOCK = threading.Lock()
 
@@ -96,19 +95,11 @@ def _register_pin(df: DataFrame) -> None:
     oldest pins beyond the cap (their blocks unpersist asynchronously).
     Keyed on (applicationId, rdd id); entries of stopped sessions are
     dropped on access (their blocks died with the session)."""
+    # Defensive: if the internals behind memo.pinned_rdd move in a
+    # future Spark, pinning silently stays uncapped rather than breaking
+    # every ranking query.
     try:
-        cap = int(os.environ.get("SPARK_GRAFT_RANK_PIN_CAP", "64"))
-    except ValueError:
-        cap = 64
-    if cap <= 0:
-        return
-    # the checkpointed Dataset's analyzed plan IS the LogicalRDD holding
-    # the pinned RDD — the only handle through which the blocks can be
-    # released later. Defensive: if the internals move in a future
-    # Spark, pinning silently stays uncapped (the round-14 behavior)
-    # rather than breaking every ranking query.
-    try:
-        rdd = df._jdf.queryExecution().analyzed().rdd()
+        rdd = memo.pinned_rdd(df)
         app = df.sparkSession.sparkContext.applicationId
     except Exception:
         return
@@ -116,7 +107,7 @@ def _register_pin(df: DataFrame) -> None:
         for k in [k for k in _PIN_LRU if k[0] != app]:
             _PIN_LRU.pop(k)
         _PIN_LRU[(app, rdd.id())] = rdd
-        while len(_PIN_LRU) > cap:
+        while len(_PIN_LRU) > RANK_PIN_CAP:
             _, old = _PIN_LRU.popitem(last=False)
             old.unpersist(False)
 
@@ -267,22 +258,14 @@ def _bucketize(
     # dedups execution but still re-analyzes the full subtree per
     # stage). Values are unchanged — the input is deterministic and
     # checkpointing only pins its computed rows.
-    # Trade-offs, parameterized via $SPARK_GRAFT_RANK_INPUT
-    # (ckpt | persist | plain):
+    # Trade-offs:
     # - checkpointed RDDs survive spark.catalog.clearCache(), so a
     #   session running MANY ranking queries pins one input frame each
-    #   (MEMORY_AND_DISK, spill-safe; bounded by queries x input width).
-    #   Long-lived production sessions that cannot afford the pinning
-    #   can select "persist" (evictable, still dedups execution).
+    #   (MEMORY_AND_DISK, spill-safe), bounded by the RANK_PIN_CAP LRU;
     # - lineage truncation trades executor-loss recomputability for
-    #   speed — the documented operators/memo tradeoff; "plain" restores
-    #   full lineage at the old cost.
-    _mode = os.environ.get("SPARK_GRAFT_RANK_INPUT", "ckpt")
-    if _mode == "persist":
-        keyed = keyed.persist()
-    elif _mode != "plain":
-        keyed = keyed.localCheckpoint(eager=False)
-        _register_pin(keyed)
+    #   speed — the documented operators/memo tradeoff.
+    keyed = keyed.localCheckpoint(eager=False)
+    _register_pin(keyed)
 
     # -- 1. size-following sample budget (one COUNT job's worth of plan,
     #       broadcast as a one-row frame; greatest(n,1) guards empty input)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from banking_streaming_etl_spark import datamodel
+from banking_streaming_etl_spark.operators import memo
 
 TOP_K = 10
 QUERY_STRIDE = 25  # vec_id % 25 == 0 -> deterministic 4% query sample
@@ -65,28 +66,20 @@ def _with_norm(df: DataFrame) -> DataFrame:
 
 NORM_SQL = f"SQRT({_dot_sql('embedding', 'embedding')})"
 
-#: session-scoped memo of the normed embeddings frame, keyed
-#: (app_id, sf_dir) — same mechanism (and eviction rule) as
-#: operators/dedup._SHARED_SHINGLES: returning the SAME DataFrame object
-#: guarantees one InMemoryRelation per (session, sf_dir) instead of one
-#: leaked cache per operator CALL (the multi-branch ANN builders each
-#: reference the frame from several join legs).
-_SHARED_EMB: dict[tuple[str, str], "DataFrame"] = {}
-
-
 def shared_normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    for key in [k for k in _SHARED_EMB if k[0] != app_id]:
-        _SHARED_EMB.pop(key)
-    key = (app_id, sf_dir)
-    df = _SHARED_EMB.get(key)
-    if df is None:
-        df = _with_norm(
+    """The normed embeddings frame, ``.cache()``d once per session and
+    sf_dir (operators/memo.shared): the SAME DataFrame object means one
+    InMemoryRelation instead of one leaked cache per operator CALL (the
+    multi-branch ANN builders each reference the frame from several
+    join legs)."""
+    return memo.shared(
+        spark,
+        sf_dir,
+        "normed_embeddings",
+        lambda: _with_norm(
             datamodel.load_table(spark, sf_dir, "embeddings")
-        ).cache()
-        _SHARED_EMB[key] = df
-    return df
-
+        ).cache(),
+    )
 
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from banking_streaming_etl_spark import datamodel
 from banking_streaming_etl_spark.functions import portable
+from banking_streaming_etl_spark.operators import memo
 
 #: LCG range (2^31 keeps every multiply below 2^63 under ANSI for the
 #: constants below) — re-exported from the shared ladder.
@@ -256,30 +257,22 @@ GROUP BY 1, 2""",
 # --- Bloom-filter membership screen ------------------------------------------
 
 
-#: session memo of the bloom probe frame, keyed (app_id, sf_dir) —
-#: evicts entries from stopped sessions like the other shared memos.
-_SHARED_PAYERS: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shared_bloom_payers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    for key in [k for k in _SHARED_PAYERS if k[0] != app_id]:
-        _SHARED_PAYERS.pop(key)
-    key = (app_id, sf_dir)
-    df = _SHARED_PAYERS.get(key)
-    if df is None:
-        df = (
-            datamodel.transactions(spark, sf_dir)
-            .groupBy("id_usuario_pagador")
-            .agg(
-                (
-                    F.max("valor_transacao") > F.lit(BLOOM_VALUE_THRESHOLD)
-                ).alias("is_member")
-            )
-            .cache()
+    """Per-payer bloom membership flags, ``.cache()``d once per session
+    and sf_dir (operators/memo.shared)."""
+    return memo.shared(
+        spark,
+        sf_dir,
+        "bloom_payers",
+        lambda: datamodel.transactions(spark, sf_dir)
+        .groupBy("id_usuario_pagador")
+        .agg(
+            (
+                F.max("valor_transacao") > F.lit(BLOOM_VALUE_THRESHOLD)
+            ).alias("is_member")
         )
-        _SHARED_PAYERS[key] = df
-    return df
+        .cache(),
+    )
 
 
 def bloom_filter_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,7 +292,7 @@ def bloom_filter_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit build, bit count) — uncached, each branch re-scans the fact
     # and re-runs the max-aggregate; memoizing (not per-call cache())
     # keeps repeated invocations in one session from leaking one
-    # InMemoryRelation each (dedup._SHARED_SHINGLES precedent)
+    # InMemoryRelation each (operators/memo.shared)
     payers = _shared_bloom_payers(spark, sf_dir)
     bit_arr = F.array(
         *[

@@ -1980,7 +1980,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    base, r_q, f_q, m_q = memo.shared_frames(
+    base, r_q, f_q, m_q = memo.shared(
         spark, sf_dir, "rfm_quintiles", _build_rfm
     )
     rfm = (

@@ -29,9 +29,12 @@ def _approved_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Read it directly only where a selective predicate must prune at the
     events scan (`filter_membership_range`); everything else reads the
-    pin. Object-memoized (datamodel.frame_memo) so repeat builds skip
-    the py4j construction and re-analysis of the join graph."""
-    return datamodel.frame_memo(
+    pin. Object-memoized (operators/memo.shared, no materialization) so
+    repeat builds skip the py4j construction and re-analysis of the
+    join graph."""
+    from banking_streaming_etl_spark.operators import memo
+
+    return memo.shared(
         spark,
         sf_dir,
         "derived:approved",

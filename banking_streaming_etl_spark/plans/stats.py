@@ -229,7 +229,7 @@ def spearman_value_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return [ap, rx, ry]
 
-    ap, rx, ry = memo.shared_frames(spark, sf_dir, "spearman_ranks", _build)
+    ap, rx, ry = memo.shared(spark, sf_dir, "spearman_ranks", _build)
     j = ap.join(rx, "valor_transacao").join(ry, "score_medio")
     dec0 = "decimal(38,0)"
     agg = j.agg(
@@ -1135,7 +1135,7 @@ def kruskal_value_by_modality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return [rank_tbl, grp]
 
-    rank_tbl, grp = memo.shared_frames(spark, sf_dir, "kruskal_rg", _build_kw)
+    rank_tbl, grp = memo.shared(spark, sf_dir, "kruskal_rg", _build_kw)
     tot = rank_tbl.agg(
         F.sum("cnt").cast("bigint").alias("_n_tot"),
         F.sum(

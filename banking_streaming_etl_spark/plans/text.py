@@ -2323,7 +2323,7 @@ def macro_ndcg_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DCG aggregates). Plan-shape tests inspect the UNmaterialized pair
     # (_macro_grouped_ranked_lazy) — the checkpoint hides the ranking
     # windows behind an ExistingRDD in this query's own plan.
-    sys_r, ideal_r = memo.shared_frames(
+    sys_r, ideal_r = memo.shared(
         spark,
         sf_dir,
         "macro_ndcg_grouped_ranks",

@@ -38,17 +38,17 @@ def all_queries() -> dict[str, Query]:
     return dict(_REGISTRY)
 
 
-_LOADED = False
+_IMPORTED = False
 
 
 def _load() -> None:
     """Import every module that registers queries (idempotent)."""
-    global _LOADED
-    if _LOADED:
+    global _IMPORTED
+    if _IMPORTED:
         return
     from banking_streaming_etl_spark.plans import (  # noqa: F401
         register_all as _plans_register,
     )
 
     _plans_register()
-    _LOADED = True
+    _IMPORTED = True

@@ -385,28 +385,6 @@ def test_global_cumsum_grouped_and_totals(spark):
     assert want.exceptAll(got).count() == 0
 
 
-def test_input_lineage_modes_identical(spark, monkeypatch):
-    """The $SPARK_GRAFT_RANK_INPUT lineage-handling knob (round-14
-    optimization: ckpt | persist | plain) must not move a single value —
-    rank, n_total, cumsum and totals are bit-identical across modes."""
-    df = _tx_values(spark)
-    results = {}
-    for mode in ("ckpt", "persist", "plain"):
-        monkeypatch.setenv("SPARK_GRAFT_RANK_INPUT", mode)
-        ranked = ranking.with_global_row_number(
-            df, "v", "i", out="r", rows_per_bucket=7
-        ).select("i", "r", "_rank_n_total")
-        cum = ranking.with_global_cumsum(
-            df, "v", "i", "v", out="c", rows_per_bucket=7
-        ).select("i", "c", "_cumsum_total")
-        results[mode] = (
-            sorted(tuple(r) for r in ranked.collect()),
-            sorted(tuple(r) for r in cum.collect()),
-        )
-    assert results["ckpt"] == results["plain"]
-    assert results["persist"] == results["plain"]
-
-
 def test_overlap_checkpoint_modes_identical(spark):
     """overlap_checkpoint (round-14 optimization: concurrent eager
     materialization of independent ranking passes, guide §2.6) must not
@@ -460,12 +438,11 @@ def test_multi_weight_cumsum_matches_single_passes(spark):
 
 
 def test_rank_input_pin_lru_cap(spark, monkeypatch):
-    """The $SPARK_GRAFT_RANK_PIN_CAP LRU (round-15): ckpt-mode ranking
-    builds beyond the cap unpersist the OLDEST pinned input's blocks —
-    the registry stays bounded, the newest pins keep their storage, and
-    the evicted RDD's storage level drops to non-cached."""
-    monkeypatch.setenv("SPARK_GRAFT_RANK_INPUT", "ckpt")
-    monkeypatch.setenv("SPARK_GRAFT_RANK_PIN_CAP", "2")
+    """The RANK_PIN_CAP LRU (round-15): ranking builds beyond the cap
+    unpersist the OLDEST pinned input's blocks — the registry stays
+    bounded, the newest pins keep their storage, and the evicted RDD's
+    storage level drops to non-cached."""
+    monkeypatch.setattr(ranking, "RANK_PIN_CAP", 2)
     ranking._PIN_LRU.clear()
     df = _tx_values(spark)
     frames = []
@@ -484,13 +461,36 @@ def test_rank_input_pin_lru_cap(spark, monkeypatch):
     # the newest two frames stay fully usable after the eviction
     for f in frames[1:]:
         assert f.count() > 0
-    # cap 0 = uncapped (the round-14 behavior): no eviction bookkeeping
-    monkeypatch.setenv("SPARK_GRAFT_RANK_PIN_CAP", "0")
-    before = len(ranking._PIN_LRU)
-    ranking.with_global_row_number(
-        df.withColumn("j", F.lit(9)), "v", "i", out="r", rows_per_bucket=7
-    ).count()
-    assert len(ranking._PIN_LRU) == before
+
+
+def test_rank_plan_fails_loudly_after_its_pin_is_evicted(spark, monkeypatch):
+    """The eviction hazard the LRU trades for bounded storage: a ranking
+    plan followed by more than RANK_PIN_CAP ranking builds has lost its
+    input pin, and its next action must fail loudly — never return
+    values from a silently recomputed or partial input. A plan that ran
+    before the eviction misses its checkpoint blocks; a plan built but
+    never run cannot checkpoint the released RDD at all."""
+    monkeypatch.setattr(ranking, "RANK_PIN_CAP", 2)
+    ranking._PIN_LRU.clear()
+    df = _tx_values(spark)
+
+    def build(j):
+        return ranking.with_global_row_number(
+            df.withColumn("j", F.lit(j)), "v", "i", out="r",
+            rows_per_bucket=7,
+        )
+
+    ran = build(-2)
+    ran.count()
+    never_ran = build(-1)
+    for j in range(2):
+        build(j)
+    with pytest.raises(Exception, match="Checkpoint block .* not found"):
+        ran.count()
+    with pytest.raises(
+        Exception, match="is not appropriate for local checkpointing"
+    ):
+        never_ran.count()
 
 
 @pytest.mark.parametrize("rows_per_bucket", [2, 7, 10**6])
