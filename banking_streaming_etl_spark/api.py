@@ -138,6 +138,25 @@ MEMOIZED_QUERIES = frozenset({
     "mi_modality_approval",
     "naive_bayes_approval",
     "two_proportion_approval_test",
+    # the other readers of the contingency kernel, one entry per row-key
+    # set: (value bin), (modality), (hour), (value band), (modality, hour)
+    "js_divergence_value_by_approval",
+    "loo_target_encode_modality",
+    "ucb1_modality_ranking",
+    "cusum_hourly_drift",
+    "cochran_armitage_trend",
+    "ols_hourly_trend_by_modality",
+    # the pinned hourly count series (plans.behavior._hourly_counts);
+    # Theil-Sen also pins its ranked median, EWMA its chart
+    "changepoint_hourly",
+    "theil_sen_hourly_trend",
+    "ewma_control_chart",
+    "seasonal_naive_eval",
+    # one pinned group table each (fold, modality, stratum, modality)
+    "cv_fold_metrics",
+    "anova_value_by_modality",
+    "stratified_ate_balance_gate",
+    "neyman_allocation",
 })
 
 

@@ -375,24 +375,28 @@ def _hits_sql() -> str:
         "ROUND(CAST(COALESCE(s.s, CAST(0 AS DECIMAL(28,9))) AS DOUBLE)"
         " / CAST(t.tot AS DOUBLE), 9)"
     )
+    # Each iteration's frames are read twice (the next join and the
+    # total), so DuckDB 1.0's CTE inlining grows the plan exponentially
+    # in HITS_ITERS (~300 s at sf0.001); MATERIALIZED evaluates each
+    # once (0.1 s) with the same values.
     iters = []
     for i in range(1, HITS_ITERS + 1):
         iters.append(f"""
-ar{i} AS (
+ar{i} AS MATERIALIZED (
     SELECT e.dst AS u, SUM(CAST(ROUND(p.h, 9) AS DECIMAL(28,9))) AS s
     FROM edges e JOIN h{i - 1} p ON e.src = p.u GROUP BY e.dst
 ),
 at{i} AS (SELECT SUM(s) AS tot FROM ar{i}),
-a{i} AS (
+a{i} AS MATERIALIZED (
     SELECT nodes.u, {norm} AS a
     FROM nodes LEFT JOIN ar{i} s ON nodes.u = s.u CROSS JOIN at{i} t
 ),
-hr{i} AS (
+hr{i} AS MATERIALIZED (
     SELECT e.src AS u, SUM(CAST(ROUND(p.a, 9) AS DECIMAL(28,9))) AS s
     FROM edges e JOIN a{i} p ON e.dst = p.u GROUP BY e.src
 ),
 ht{i} AS (SELECT SUM(s) AS tot FROM hr{i}),
-h{i} AS (
+h{i} AS MATERIALIZED (
     SELECT nodes.u, {norm} AS h
     FROM nodes LEFT JOIN hr{i} s ON nodes.u = s.u CROSS JOIN ht{i} t
 )""")

@@ -770,14 +770,24 @@ hourly AS (
 
 
 def _hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of _HOURLY_CTE: (hk bigint epoch-hour, total bigint)."""
-    t = datamodel.transactions(spark, sf_dir)
-    return t.groupBy(
-        F.expr(
-            "unix_micros(date_trunc('hour', data_horario))"
-            " div 3600000000"
-        ).alias("hk")
-    ).agg(F.count("*").cast("bigint").alias("total"))
+    """Spark twin of _HOURLY_CTE: (hk bigint epoch-hour, total bigint),
+    pinned once per session (operators/memo.shared_frame) — the
+    changepoint, Theil-Sen, EWMA and seasonal-naive queries read it."""
+    from banking_streaming_etl_spark.operators import memo
+
+    return memo.shared_frame(
+        spark,
+        sf_dir,
+        "hourly_counts",
+        lambda: datamodel.transactions(spark, sf_dir)
+        .groupBy(
+            F.expr(
+                "unix_micros(date_trunc('hour', data_horario))"
+                " div 3600000000"
+            ).alias("hk")
+        )
+        .agg(F.count("*").cast("bigint").alias("total")),
+    )
 
 
 CHANGEPOINT_SQL = datamodel.with_ctes(
@@ -806,10 +816,12 @@ def theil_sen_hourly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregate; the pair frame is hours^2 — bounded by the TIME RANGE
     of the data, not its volume (a year is ~38M pairs) — built as a
     broadcast non-equi join of the hour frame against itself, then one
-    rank pass + bounded aggregates. No window over the fact table."""
-    from banking_streaming_etl_spark.operators import ranking
+    rank pass + bounded aggregates. No window over the fact table. The
+    rank pass runs once per session: the median is pinned with
+    memo.shared_frame (each rank pass pins its own input)."""
+    from banking_streaming_etl_spark.operators import memo, ranking
 
-    hourly = _hourly_counts(spark, sf_dir).localCheckpoint(eager=True)
+    hourly = _hourly_counts(spark, sf_dir)
     a = hourly.select(F.col("hk").alias("h1"), F.col("total").alias("c1"))
     b = hourly.select(F.col("hk").alias("h2"), F.col("total").alias("c2"))
     pairs = a.join(F.broadcast(b), F.col("h2") > F.col("h1"))
@@ -834,17 +846,17 @@ def theil_sen_hourly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("h1") * F.lit(4294967296).cast("bigint") + F.col("h2"))
         .alias("pid"),
     )
-    ranked = ranking.with_global_row_number(
-        slopes, "v", "pid", out="r", nulls="reject"
-    )
-    # exact median: avg of ranks {(n+1) div 2, n div 2 + 1} — one row
-    # selected twice for odd n collapses to the single middle value
-    med = (
-        ranked.filter(
+
+    def _median() -> DataFrame:
+        ranked = ranking.with_global_row_number(
+            slopes, "v", "pid", out="r", nulls="reject"
+        )
+        # exact median: avg of ranks {(n+1) div 2, n div 2 + 1} — one
+        # row selected twice for odd n collapses to the single middle
+        return ranked.filter(
             (F.col("r") == F.expr("(_rank_n_total + 1) DIV 2"))
             | (F.col("r") == F.expr("_rank_n_total DIV 2 + 1"))
-        )
-        .agg(
+        ).agg(
             # count > 0 guard: an empty pair set (degenerate <2-hour
             # series) would make this a double x/0 — Spark ANSI throws
             # where DuckDB emits NULL
@@ -853,7 +865,8 @@ def theil_sen_hourly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("v") / F.count("*").cast("double"),
             ).alias("inclinacao_sen")
         )
-    )
+
+    med = memo.shared_frame(spark, sf_dir, "theil_sen_median", _median)
     mk = pairs.agg(
         F.count("*").cast("bigint").alias("n_pares"),
         F.sum(
@@ -994,8 +1007,17 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses to the hours-sized series once; the weighted prefix pairs
     are a broadcast non-equi self-join of the checkpointed hour frame
     (bounded by time range); ranks ride the distributed ranking
-    operator, no unpartitioned window."""
-    return ewma_from_hourly(_hourly_counts(spark, sf_dir))
+    operator, no unpartitioned window. The chart is pinned once per
+    session (memo.shared_frame), because its rank pass pins its own
+    input: per call, each pin would stay behind."""
+    from banking_streaming_etl_spark.operators import memo
+
+    return memo.shared_frame(
+        spark,
+        sf_dir,
+        "ewma_chart",
+        lambda: _ewma_chart(_hourly_counts(spark, sf_dir)),
+    )
 
 
 def ewma_from_hourly(hourly_in: DataFrame) -> DataFrame:
@@ -1004,10 +1026,17 @@ def ewma_from_hourly(hourly_in: DataFrame) -> DataFrame:
     (`streaming/windows.streaming_hourly_approvals` maintains the same
     bounded hourly state; evaluating this on read makes the stream's
     chart bit-identical to the batch query by construction, the
-    cusum_from_hourly convention)."""
+    cusum_from_hourly convention). The state is pinned first: every
+    stage below reads it."""
+    return _ewma_chart(
+        hourly_in.select("hk", "total").localCheckpoint(eager=True)
+    )
+
+
+def _ewma_chart(hourly: DataFrame) -> DataFrame:
+    """The EWMA chart over a pinned (hk, total) frame."""
     from banking_streaming_etl_spark.operators import ranking
 
-    hourly = hourly_in.select("hk", "total").localCheckpoint(eager=True)
     idx = ranking.with_global_row_number(
         hourly, "hk", "hk", out="t"
     ).select("hk", "total", "t")
@@ -1126,7 +1155,7 @@ def seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one hours-sized aggregate, two self-equi-joins on the
     hour key, three scalar aggregates — no window, no fact-table
     re-scan."""
-    hourly = _hourly_counts(spark, sf_dir).localCheckpoint(eager=True)
+    hourly = _hourly_counts(spark, sf_dir)
 
     def _sums(lag: int, pfx: str) -> DataFrame:
         h = hourly.select("hk", F.col("total").alias("y"))

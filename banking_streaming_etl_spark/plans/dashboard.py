@@ -69,9 +69,9 @@ def _approval_contingency(
     cell — the denied cell is n - n_y, since `transacao_aprovada` is
     never NULL); `n_total` and `n_y_total` (the table total and the
     approved column margin). All exact bigints. A NULL key forms its
-    own row, as in GROUP BY. A row-key name stands for one expression
-    across the codebase: it is the memo key. Model-sized at any corpus
-    size."""
+    own row, as in GROUP BY. The memo key is every (name, expression)
+    pair, so one name may carry different expressions. Model-sized at
+    any corpus size."""
     from banking_streaming_etl_spark.operators import memo
 
     def build() -> DataFrame:
@@ -89,9 +89,8 @@ def _approval_contingency(
         )
         return counts.crossJoin(F.broadcast(total))
 
-    return memo.shared_frame(
-        spark, sf_dir, "contingency:" + ",".join(rows), build
-    )
+    key = ",".join(f"{k}={e}" for k, e in rows.items())
+    return memo.shared_frame(spark, sf_dir, "contingency:" + key, build)
 
 
 def _modality_approval_cells(spark: SparkSession, sf_dir: str) -> DataFrame:

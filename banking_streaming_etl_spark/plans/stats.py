@@ -448,32 +448,19 @@ def js_divergence_value_by_approval(
     column (never a transcendental — CLAUDE.md group-key rule); the
     contribution 0.5*p*ln(p/m) + 0.5*q*ln(q/m) with m=(p+q)/2 is
     transcendental except at p=q where it is exactly 0 in both engines,
-    so ROUND(.,6) is unambiguous. One bin aggregate + broadcast totals —
-    the bin table is model-sized at any corpus size."""
-    t = _approved(spark, sf_dir).select(
-        "valor_transacao", "transacao_aprovada"
-    )
-    g = (
-        t.groupBy(
-            F.floor(F.col("valor_transacao") / F.lit(JS_BIN_WIDTH))
-            .cast("bigint")
-            .alias("balde")
-        )
-        .agg(
-            F.sum(F.when(F.col("transacao_aprovada"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_aprovadas"),
-            F.sum(F.when(F.col("transacao_aprovada"), 0).otherwise(1))
-            .cast("bigint")
-            .alias("n_negadas"),
-        )
-        # pinned (round-14): the tot branch + the final select re-derived
-        # the _approved subtree (2 passes before; guide §2.4/§3.3)
-        .localCheckpoint(eager=False)
-    )
-    tot = g.agg(
-        F.sum("n_aprovadas").cast("bigint").alias("na"),
-        F.sum("n_negadas").cast("bigint").alias("nd"),
+    so ROUND(.,6) is unambiguous. The bin table is the pinned (balde)
+    entry of the contingency kernel — model-sized at any corpus size."""
+    g = _approval_contingency(
+        spark,
+        sf_dir,
+        balde=F.floor(F.col("valor_transacao") / F.lit(JS_BIN_WIDTH))
+        .cast("bigint"),
+    ).select(
+        "balde",
+        F.col("n_y").alias("n_aprovadas"),
+        (F.col("n") - F.col("n_y")).alias("n_negadas"),
+        F.col("n_y_total").alias("na"),
+        (F.col("n_total") - F.col("n_y_total")).alias("nd"),
     )
     # guarded shares: a one-class corpus zeroes a TOTAL — the share's
     # value is then never used (the n>0 contrib guards below), but the
@@ -494,14 +481,11 @@ def js_divergence_value_by_approval(
     ).otherwise(
         F.lit(0.0)
     )
-    return (
-        g.crossJoin(F.broadcast(tot))
-        .select(
-            "balde",
-            "n_aprovadas",
-            "n_negadas",
-            F.round(contrib, 6).alias("js_contrib"),
-        )
+    return g.select(
+        "balde",
+        "n_aprovadas",
+        "n_negadas",
+        F.round(contrib, 6).alias("js_contrib"),
     )
 
 
@@ -560,12 +544,14 @@ def cv_fold_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     One corpus aggregate; totals re-aggregated from the k fold rows
     (margins-from-cells, never a second scan) and broadcast back. The
     LOO mean is (total_dec - fold_dec)/(n_total - n_fold): exact decimal
-    subtraction, ONE double division, unrounded and term-identical."""
-
-
-    t = _approved(spark, sf_dir)
-    folds = (
-        t.groupBy(
+    subtraction, ONE double division, unrounded and term-identical.
+    The fold table is pinned once per session (memo.shared_frame)."""
+    folds = memo.shared_frame(
+        spark,
+        sf_dir,
+        "cv_folds",
+        lambda: _approved(spark, sf_dir)
+        .groupBy(
             (portable.lcg_hash(F.col("id_transacao")) % CV_FOLDS).alias(
                 "fold"
             )
@@ -576,10 +562,7 @@ def cv_fold_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_aprovadas"),
             F.sum(exact._d(F.col("valor_transacao"))).alias("_soma_dec"),
-        )
-        # pinned (round-14): the tot branch + the final join re-derived
-        # the _approved subtree (24 scans before; guide §2.4/§3.3)
-        .localCheckpoint(eager=False)
+        ),
     )
     tot = folds.agg(
         F.sum("n_linhas").cast("bigint").alias("_n_tot"),
@@ -639,10 +622,11 @@ def loo_target_encode_modality(spark: SparkSession, sf_dir: str) -> DataFrame:
     m-smoothed variant shrunk toward the global prior — so the feature
     can be joined straight into a training frame without target leakage.
 
-    Scale shape: one group aggregate (|modalities| rows) broadcast back
-    onto the fact — a narrow map per row, no second shuffle. Both
-    encodings are exact integer ratios emitted as unrounded doubles
-    through term-identical expressions."""
+    Scale shape: the group table is the pinned (modality) entry of the
+    contingency kernel (|modalities| rows) broadcast back onto the fact
+    — a narrow map per row, no shuffle. Both encodings are exact
+    integer ratios emitted as unrounded doubles through term-identical
+    expressions."""
     t = _approved(spark, sf_dir).select(
         "id_transacao",
         "modalidade_pagamento",
@@ -651,21 +635,14 @@ def loo_target_encode_modality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("aprovada"),
     )
-    g = (
-        t.groupBy("modalidade_pagamento")
-        .agg(
-            F.count("*").cast("bigint").alias("_n_g"),
-            F.sum("aprovada").cast("bigint").alias("_n_ap_g"),
-        )
-        # pinned (round-14): the tot branch + the broadcast join side
-        # re-derived the _approved subtree (36 scans before; after: the
-        # fact is scanned once for the group table and once for the
-        # row-level encode join — the feature-attach floor)
-        .localCheckpoint(eager=False)
-    )
-    tot = g.agg(
-        F.sum("_n_g").cast("bigint").alias("_n_tot"),
-        F.sum("_n_ap_g").cast("bigint").alias("_n_ap_tot"),
+    g = _approval_contingency(
+        spark, sf_dir, modalidade_pagamento=F.col("modalidade_pagamento")
+    ).select(
+        "modalidade_pagamento",
+        F.col("n").alias("_n_g"),
+        F.col("n_y").alias("_n_ap_g"),
+        F.col("n_total").alias("_n_tot"),
+        F.col("n_y_total").alias("_n_ap_tot"),
     )
     # guard: a singleton group has NO leave-one-out peers -> NULL in
     # BOTH dialects (Spark ANSI throws on the /0, DuckDB would emit NaN)
@@ -682,16 +659,12 @@ def loo_target_encode_modality(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("_n_g") - F.lit(1)).cast("double")
         + F.lit(float(TARGET_SMOOTH_M))
     )
-    return (
-        t.join(F.broadcast(g), "modalidade_pagamento")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "id_transacao",
-            "modalidade_pagamento",
-            "aprovada",
-            loo.alias("codif_loo"),
-            suave.alias("codif_loo_suave"),
-        )
+    return t.join(F.broadcast(g), "modalidade_pagamento").select(
+        "id_transacao",
+        "modalidade_pagamento",
+        "aprovada",
+        loo.alias("codif_loo"),
+        suave.alias("codif_loo_suave"),
     )
 
 
@@ -1255,13 +1228,15 @@ def anova_value_by_modality(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin. Output: one row per modality (n, mean, between term)
     with the ANOVA scalars broadcast onto every row.
 
-    Scale: ONE modality-keyed hash aggregate over the corpus; everything
-    after is k-row arithmetic on broadcasts."""
-    t = _approved(spark, sf_dir).select(
-        "modalidade_pagamento", "valor_transacao"
-    )
-    grp = (
-        t.groupBy("modalidade_pagamento")
+    Scale: ONE modality-keyed hash aggregate over the corpus, pinned
+    once per session (memo.shared_frame); everything after is k-row
+    arithmetic on broadcasts."""
+    grp = memo.shared_frame(
+        spark,
+        sf_dir,
+        "anova_groups",
+        lambda: _approved(spark, sf_dir)
+        .groupBy("modalidade_pagamento")
         .agg(
             F.count("*").cast("bigint").alias("n"),
             F.sum(exact._d("valor_transacao")).alias("_s"),
@@ -1271,12 +1246,7 @@ def anova_value_by_modality(spark: SparkSession, sf_dir: str) -> DataFrame:
                     * F.round("valor_transacao", 6)
                 )
             ).alias("_q"),
-        )
-        # pinned (round-14): persist dedup'd execution but the tot/gt
-        # branches still re-analyzed (and on exchange-reuse misses
-        # re-executed) the _approved subtree (36 scans before; guide
-        # §2.4/§3.3 — after: one subtree, one pass)
-        .localCheckpoint(eager=False)
+        ),
     )
     tot = grp.agg(
         F.sum("n").cast("bigint").alias("_n_tot"),
@@ -1440,16 +1410,20 @@ def stratified_ate_balance_gate(
     sorted fold, so both ATEs are bit-identical cross-engine.
 
     Scale: ONE hash aggregate over the corpus onto <= |modalities| x 4
-    strata; everything after is broadcast arithmetic on the tiny
-    stratum table."""
-    ap = _approved(spark, sf_dir).select(
-        "modalidade_pagamento",
-        _faixa_valor().alias("faixa_valor"),
-        F.col("saldo_aprovado").cast("int").alias("t"),
-        F.col("score_aprovado").cast("int").alias("y"),
-    )
-    grp = (
-        ap.groupBy("modalidade_pagamento", "faixa_valor")
+    strata, pinned once per session (memo.shared_frame); everything
+    after is broadcast arithmetic on the tiny stratum table."""
+    grp = memo.shared_frame(
+        spark,
+        sf_dir,
+        "ate_strata",
+        lambda: _approved(spark, sf_dir)
+        .select(
+            "modalidade_pagamento",
+            _faixa_valor().alias("faixa_valor"),
+            F.col("saldo_aprovado").cast("int").alias("t"),
+            F.col("score_aprovado").cast("int").alias("y"),
+        )
+        .groupBy("modalidade_pagamento", "faixa_valor")
         .agg(
             F.count("*").cast("bigint").alias("n"),
             F.sum("t").cast("bigint").alias("n1"),
@@ -1457,12 +1431,7 @@ def stratified_ate_balance_gate(
             F.sum((1 - F.col("t")) * F.col("y")).cast("bigint").alias("sy0"),
         )
         .withColumn("_chave", F.concat_ws("|", "modalidade_pagamento",
-                                          "faixa_valor"))
-        # pinned (round-14): persist dedup'd execution but the tot +
-        # fold branches still re-analyzed (and on exchange-reuse misses
-        # re-executed) the _approved subtree (36 scans before; guide
-        # §2.4/§3.3 — after: one subtree, one pass)
-        .localCheckpoint(eager=False)
+                                          "faixa_valor")),
     )
     tot = grp.agg(
         F.sum("n").cast("bigint").alias("_n_tot"),
@@ -1746,25 +1715,20 @@ def ucb1_modality_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln(N) is computed once, ROUND(.,6)-pinned, and COMPOSED into the
     bonus (sqrt is IEEE-correctly-rounded on the identical operand), so
     `ucb_score` is bit-identical cross-engine without a final rounding.
-    ONE hash aggregate onto the modality table; N re-aggregates from
-    the group rows."""
-    ap = _approved(spark, sf_dir).select(
+    The arm table is the pinned (modality) entry of the contingency
+    kernel; N is its table total."""
+    grp = _approval_contingency(
+        spark, sf_dir, modalidade_pagamento=F.col("modalidade_pagamento")
+    ).select(
         "modalidade_pagamento",
-        F.col("transacao_aprovada").cast("int").alias("y"),
-    )
-    grp = ap.groupBy("modalidade_pagamento").agg(
-        F.count("*").cast("bigint").alias("n_puxadas"),
-        F.sum("y").cast("bigint").alias("recompensas"),
-        # pinned (round-14): the ln(N) re-aggregate + the final select
-        # re-derived the _approved subtree (2 passes before; §2.4/§3.3)
-    ).localCheckpoint(eager=False)
-    tot = grp.agg(
-        F.round(F.log(F.sum("n_puxadas").cast("double")), 6).alias("_ln_n")
+        F.col("n").alias("n_puxadas"),
+        F.col("n_y").alias("recompensas"),
+        F.round(F.log(F.col("n_total").cast("double")), 6).alias("_ln_n"),
     )
     nd = F.col("n_puxadas").cast("double")
     mean = F.col("recompensas").cast("double") / nd
     bonus = F.sqrt(F.lit(2.0) * F.col("_ln_n") / nd)
-    return grp.crossJoin(F.broadcast(tot)).select(
+    return grp.select(
         "modalidade_pagamento",
         "n_puxadas",
         "recompensas",
@@ -2250,21 +2214,11 @@ def cusum_hourly_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     CUSUMs are exact-integer ratios — no rounding, no transcendental.
     The ordered windows run over the <= |hours| aggregated series (the
     seasonal_decompose / gapfill boundedness class, whitelisted with
-    that argument); the corpus is touched by ONE hourly aggregate."""
-    hourly = (
-        _approved(spark, sf_dir)
-        .groupBy(F.date_trunc("hour", "data_horario").alias("hora"))
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(F.col("transacao_aprovada").cast("int"))
-            .cast("bigint")
-            .alias("aprovadas"),
-        )
-        # pinned (round-14): cusum_from_hourly's tot branch + windowed
-        # join re-derived the _approved subtree (24 scans before; guide
-        # §2.4/§3.3 — after: one subtree, one pass)
-        .localCheckpoint(eager=False)
-    )
+    that argument); the series is the pinned (hora) entry of the
+    contingency kernel."""
+    hourly = _approval_contingency(
+        spark, sf_dir, hora=F.date_trunc("hour", "data_horario")
+    ).select("hora", "n", F.col("n_y").alias("aprovadas"))
     return cusum_from_hourly(hourly)
 
 
@@ -2414,24 +2368,12 @@ def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Every double is an exact-integer cast pushed through an identical
     multiply/divide/sqrt ladder in both dialects — bit-identical, no
-    rounding. Scale: ONE corpus hash aggregate onto 4 band rows; the
-    z scalar re-aggregates the 4-row table (never a second scan)."""
-    w_col = _faixa_valor()
-    grp = (
-        _approved(spark, sf_dir)
-        .select(
-            w_col.alias("faixa_valor"),
-            F.col("transacao_aprovada").cast("int").alias("y"),
-        )
-        .groupBy("faixa_valor")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("y").cast("bigint").alias("aprovadas"),
-        )
-        # pinned (round-14): the z re-aggregate + the final select
-        # re-derived the _approved subtree (2 passes before; §2.4/§3.3)
-        .localCheckpoint(eager=False)
-    )
+    rounding. Scale: the 4 band rows are the pinned (faixa_valor) entry
+    of the contingency kernel; the z scalar re-aggregates them (never a
+    second scan)."""
+    grp = _approval_contingency(
+        spark, sf_dir, faixa_valor=_faixa_valor()
+    ).select("faixa_valor", "n", F.col("n_y").alias("aprovadas"))
     w = (
         F.when(F.col("faixa_valor") == "baixo", 0)
         .when(F.col("faixa_valor") == "medio", 1)
@@ -2543,22 +2485,16 @@ def ols_hourly_trend_by_modality(
     cross-engine, no rounding, no fold needed. Degenerate groups
     (single hour, constant series) emit NULLs via guarded division.
 
-    Scale: ONE corpus aggregate onto (modality x hour) rows, a second
-    tiny aggregate onto |modalities| rows, one broadcast scalar (the
-    global min hour). No window, no sort, no fold."""
-    hours = (
-        _approved(spark, sf_dir)
-        .select(
-            "modalidade_pagamento",
-            F.expr("unix_micros(data_horario) div 3600000000").alias("_h"),
-            F.col("transacao_aprovada").cast("int").alias("y"),
-        )
-        .groupBy("modalidade_pagamento", "_h")
-        .agg(F.sum("y").cast("bigint").alias("a"))
-        # pinned (round-14): the h0 scalar + the moments aggregate
-        # re-derived the _approved subtree (2 passes before; §2.4/§3.3)
-        .localCheckpoint(eager=False)
-    )
+    Scale: the (modality x hour) rows are the pinned entry of the
+    contingency kernel; a tiny aggregate onto |modalities| rows, one
+    broadcast scalar (the global min hour). No window, no sort, no
+    fold."""
+    hours = _approval_contingency(
+        spark,
+        sf_dir,
+        modalidade_pagamento=F.col("modalidade_pagamento"),
+        _h=F.expr("unix_micros(data_horario) div 3600000000"),
+    ).select("modalidade_pagamento", "_h", F.col("n_y").alias("a"))
     h0 = hours.agg(F.min("_h").alias("_h0"))
     dec0 = "decimal(38,0)"
     x = (F.col("_h") - F.col("_h0")).cast(dec0)
@@ -2912,25 +2848,24 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic sorted fold, and floor/remainder arithmetic is
     identical IEEE ops on identical operands in both dialects.
 
-    Scale: ONE corpus aggregate onto |modalities| stratum rows;
-    everything after (fold, remainder rank, leftover re-aggregate) runs
-    over that bounded frame — the remainder window is whitelisted with
-    that boundedness argument."""
+    Scale: ONE corpus aggregate onto |modalities| stratum rows, pinned
+    once per session (memo.shared_frame); everything after (fold,
+    remainder rank, leftover re-aggregate) runs over that bounded frame
+    — the remainder window is whitelisted with that boundedness
+    argument."""
     from pyspark.sql import Window as W
 
-    grp = (
-        _approved(spark, sf_dir)
+    grp = memo.shared_frame(
+        spark,
+        sf_dir,
+        "neyman_strata",
+        lambda: _approved(spark, sf_dir)
         .groupBy("modalidade_pagamento")
         .agg(
             F.count("*").cast("bigint").alias("n_h"),
             exact.exact_std("valor_transacao", "desvio"),
         )
-        .withColumn("_w", F.col("n_h").cast("double") * F.col("desvio"))
-        # pinned (round-14): persist dedup'd execution but the fold +
-        # alloc + leftover branches still re-analyzed (and on
-        # exchange-reuse misses re-executed) the _approved subtree
-        # (30 scans before; guide §2.4/§3.3 — one subtree, one pass)
-        .localCheckpoint(eager=False)
+        .withColumn("_w", F.col("n_h").cast("double") * F.col("desvio")),
     )
     tw = _fold_terms(grp, "modalidade_pagamento", F.col("_w")) \
         .withColumnRenamed("_fold", "_tw")

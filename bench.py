@@ -329,11 +329,18 @@ def _warm_family_memos(spark, sf_dir: str) -> None:
 
     # the scored-fact pin, then the contingency kernel: building a
     # family member pins its kernel entry — the (modality),
-    # (modality, value band) and (value group) row keys
+    # (modality, value band), (value group), (value bin), (hour),
+    # (value band) and (modality, hour) row keys — then the hourly
+    # count series
     _dashboard._approved(spark, sf_dir)
     _dashboard.mi_modality_approval(spark, sf_dir)
     _stats.naive_bayes_approval(spark, sf_dir)
     _stats.two_proportion_approval_test(spark, sf_dir)
+    _stats.js_divergence_value_by_approval(spark, sf_dir)
+    _stats.cusum_hourly_drift(spark, sf_dir)
+    _stats.cochran_armitage_trend(spark, sf_dir)
+    _stats.ols_hourly_trend_by_modality(spark, sf_dir)
+    _behavior._hourly_counts(spark, sf_dir)
     _dashboard._cal_rank_asc(spark, sf_dir)
     _dashboard._cal_rank_desc(spark, sf_dir)
     _dashboard._modality_value_ranked(spark, sf_dir)

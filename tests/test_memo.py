@@ -154,3 +154,20 @@ def test_shared_frame_survives_cache_eviction(spark):
     # the checkpointed data is still readable post-eviction (a lazily
     # cached memo would silently recompute here instead)
     assert b.count() == 7
+
+
+def test_contingency_kernel_keys_on_each_expression(spark, sf_dir):
+    """The contingency kernel's memo key carries each row-key
+    expression, not only its name: `hora` as the hour of day and as the
+    truncated hour timestamp are two entries, and each is built once."""
+    from banking_streaming_etl_spark.plans import dashboard
+
+    def kernel(hora):
+        return dashboard._approval_contingency(spark, sf_dir, hora=hora)
+
+    of_day = kernel(F.hour("data_horario"))
+    of_series = kernel(F.date_trunc("hour", "data_horario"))
+    assert of_series is not of_day
+    assert dict(of_day.dtypes)["hora"] == "int"
+    assert dict(of_series.dtypes)["hora"] == "timestamp"
+    assert kernel(F.hour("data_horario")) is of_day

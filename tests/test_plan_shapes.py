@@ -101,6 +101,26 @@ _CONTINGENCY_FAMILY = (
     "two_proportion_approval_test",
 )
 
+#: builders that read a session pin instead of pinning per call: the
+#: other contingency-kernel readers, the readers of the pinned hourly
+#: count series, and four builders with one pinned group table each
+_SESSION_PIN_READERS = (
+    "js_divergence_value_by_approval",
+    "loo_target_encode_modality",
+    "ucb1_modality_ranking",
+    "cusum_hourly_drift",
+    "cochran_armitage_trend",
+    "ols_hourly_trend_by_modality",
+    "changepoint_hourly",
+    "theil_sen_hourly_trend",
+    "ewma_control_chart",
+    "seasonal_naive_eval",
+    "cv_fold_metrics",
+    "anova_value_by_modality",
+    "stratified_ate_balance_gate",
+    "neyman_allocation",
+)
+
 
 def test_dashboard_analyses_read_the_scored_fact_pin(spark):
     """The ten dashboard analyses read the session pin of the scored
@@ -125,27 +145,29 @@ def test_scored_fact_build_is_broadcast_only(spark):
 
 
 def test_contingency_family_rebuilds_run_no_jobs(spark):
-    """Once the contingency kernel is pinned, building any family member
-    again runs no Spark job: no per-call pin or eager aggregate is left
-    in the builders."""
+    """Once the contingency kernel and the other session pins are built,
+    building any of their readers again runs no Spark job: no per-call
+    pin or eager aggregate is left in the builders."""
     sc = spark.sparkContext
-    for name in _CONTINGENCY_FAMILY:
+    names = _CONTINGENCY_FAMILY + _SESSION_PIN_READERS
+    for name in names:
         _query(spark, name)
-    for name in _CONTINGENCY_FAMILY:
+    for name in names:
         before = sc._jsc.sc().dagScheduler().nextJobId()
         _query(spark, name)
         assert sc._jsc.sc().dagScheduler().nextJobId() == before, name
 
 
 def test_analyst_session_pins_do_not_grow_across_passes(spark):
-    """Lifecycle: the dashboard's analyses and views plus the
-    contingency family pin their shared frames once per session. A
-    second pass over the same queries adds no persisted RDD — no
-    per-call pin survives its query."""
+    """Lifecycle: the dashboard's analyses and views, the contingency
+    family and the other session-pin readers pin their shared frames
+    once per session. A second pass over the same queries adds no
+    persisted RDD — no per-call pin survives its query."""
     names = (
         _DASHBOARD_ANALYSES
         + ("perf_stats_by_modality", "perf_temporal_hourly")
         + _CONTINGENCY_FAMILY
+        + _SESSION_PIN_READERS
     )
     sc = spark.sparkContext
     pinned = []
