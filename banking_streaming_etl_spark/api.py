@@ -157,6 +157,14 @@ MEMOIZED_QUERIES = frozenset({
     "anova_value_by_modality",
     "stratified_ate_balance_gate",
     "neyman_allocation",
+    # per-table audit aggregates, the three KMV sketch frames, the SCD2
+    # dim projection and PIT history; score_recombination reads the
+    # scored-fact pin
+    "data_contract_audit",
+    "kmv_modality_overlap",
+    "score_recombination",
+    "scd2_user_history",
+    "pit_balance_feature_join",
 })
 
 

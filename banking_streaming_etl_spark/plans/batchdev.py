@@ -27,14 +27,15 @@ from banking_streaming_etl_spark.functions import scores
 
 
 def score_recombination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4/J5: per-score frames inner-joined back on id, flags left-joined."""
-    # pinned (round-14): cache() dedup'd execution of the six score/flag
-    # branches but each still carried the full enrichment subtree in the
-    # plan (42 scans before; §2.4/§3.3 — the lazy localCheckpoint
-    # truncates all six to one ExistingRDD read)
-    enriched = datamodel.enriched_transactions(spark, sf_dir).localCheckpoint(
-        eager=False
-    )
+    """J4/J5: per-score frames inner-joined back on id, flags left-joined.
+
+    The six branches read the session pin of the scored fact
+    (plans.dashboard._approved), which carries every enriched column:
+    no branch re-plans the enrichment subtree and no pin is made per
+    call."""
+    from banking_streaming_etl_spark.plans.dashboard import _approved
+
+    enriched = _approved(spark, sf_dir)
 
     t5 = enriched.select("id_transacao", scores.t5_distance_score().alias("t5_score"))
     t6 = enriched.select("id_transacao", scores.t6_value_score().alias("t6_score"))

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from banking_streaming_etl_spark import datamodel
 from banking_streaming_etl_spark.functions import portable
+from banking_streaming_etl_spark.operators import memo
 
 #: k-anonymity thresholds reported (class sizes below k are re-id risk).
 K_THRESHOLDS = (2, 5, 10)
@@ -601,7 +602,10 @@ def data_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each table is scanned ONCE (all its conditional counts ride
     a single aggregate); the two FK checks ride one join each keyed on
     the FK (Catalyst picks broadcast vs shuffle by dim size). Nothing
-    is collected; the output is a handful of rows."""
+    is collected; the output is a handful of rows. Each table's 1-row
+    aggregate is pinned once per session (memo.shared_frame): every
+    per-check union branch re-selects from it, so the table scan (and
+    FK join) is planned once, not once per branch."""
     orders = datamodel.load_table(spark, sf_dir, "orders")
     lineitem = datamodel.load_table(spark, sf_dir, "lineitem")
     customer = datamodel.load_table(spark, sf_dir, "customer")
@@ -615,11 +619,12 @@ def data_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias(nome)
             )
-        # pinned (round-14): every per-check union branch re-selects
-        # from this 1-row aggregate — un-pinned, each branch re-derived
-        # the table scan (+ FK join), 22 scans across the audit (guide
-        # §2.4/§3.3 — after: each table's aggregate subtree appears once)
-        one = df.agg(*aggs).localCheckpoint(eager=False)
+        one = memo.shared_frame(
+            spark,
+            sf_dir,
+            "contract:" + ",".join(nome for nome, _ in pairs),
+            lambda: df.agg(*aggs),
+        )
         outs = []
         for nome, _ in pairs:
             outs.append(

@@ -852,17 +852,23 @@ def kmv_modality_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     K-sized sketches (n_modalities x KMV_K rows — broadcast-sized
     regardless of corpus cardinality). The exact witness is one
     payer-keyed self-join, the same one shuffle `pagadores_exato`
-    pays."""
+    pays.
+
+    Three frames with several consumers each are pinned once per
+    session (memo.shared_frame): the sketch (modality pairs and both
+    union sides), the re-truncated union sketch (its stats and the
+    both-sketch count) and the distinct (modality, payer) projection
+    (the counts and both exact self-join sides). All three are bounded:
+    G x K sketch rows, pairs x K union rows, the distinct projection."""
+    from banking_streaming_etl_spark.operators import memo
+
     t = datamodel.transactions(spark, sf_dir)
-    hashed = _kmv_hashed_payers(t)
-    # pinned (round-14): the sketch frame feeds modal/pairs/both union
-    # sides, the distinct-payer projection feeds the count + BOTH exact
-    # self-join sides, and the re-truncated union feeds ustats + both —
-    # un-pinned the plan re-derived the corpus subtrees per consumer
-    # (25 scans / 91 Exchange before; §2.4/§3.3 — after 2 scans /
-    # ~16 Exchange). All three pins are bounded: G x K sketch rows,
-    # the distinct (modality, payer) projection, pairs x K union rows.
-    sk = _kmv_bottom_k(hashed).localCheckpoint(eager=False)
+    sk = memo.shared_frame(
+        spark,
+        sf_dir,
+        "kmv_sketch",
+        lambda: _kmv_bottom_k(_kmv_hashed_payers(t)),
+    )
 
     modal = sk.select("modalidade_pagamento").distinct()
     pairs = (
@@ -880,10 +886,13 @@ def kmv_modality_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     uw = W.partitionBy("ma", "mb").orderBy(F.asc("h"))
-    ub = (
-        u.withColumn("rk", F.row_number().over(uw))
-        .filter(F.col("rk") <= KMV_K)
-        .localCheckpoint(eager=False)
+    ub = memo.shared_frame(
+        spark,
+        sf_dir,
+        "kmv_union_sketch",
+        lambda: u.withColumn("rk", F.row_number().over(uw)).filter(
+            F.col("rk") <= KMV_K
+        ),
     )
     ustats = ub.groupBy("ma", "mb").agg(
         F.count("*").alias("n_u"),
@@ -896,10 +905,13 @@ def kmv_modality_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_both"))
     )
 
-    pay = (
-        t.select("modalidade_pagamento", "id_usuario_pagador")
-        .distinct()
-        .localCheckpoint(eager=False)
+    pay = memo.shared_frame(
+        spark,
+        sf_dir,
+        "kmv_payers",
+        lambda: t.select(
+            "modalidade_pagamento", "id_usuario_pagador"
+        ).distinct(),
     )
     cnt = pay.groupBy("modalidade_pagamento").agg(
         F.count("*").alias("c")

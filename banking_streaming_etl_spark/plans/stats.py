@@ -1887,8 +1887,11 @@ def cramers_v_modality_approval(
     cells = _modality_approval_cells(spark, sf_dir)
     total = cells.agg(
         F.sum("n_celula").cast("bigint").alias("n_total"),
-        F.count_distinct("modalidade_pagamento").cast("bigint").alias("r"),
-        F.count_distinct("transacao_aprovada").cast("bigint").alias("c"),
+        # distinct counts as set sizes: two count_distinct calls plan an
+        # Expand whose group order follows fresh expression ids, so each
+        # rebuild could generate (and compile) its code anew
+        F.size(F.collect_set("modalidade_pagamento")).cast("bigint").alias("r"),
+        F.size(F.collect_set("transacao_aprovada")).cast("bigint").alias("c"),
     )
     joined = (
         cells.withColumn(
@@ -3284,8 +3287,9 @@ def naive_bayes_approval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cells.agg(
         F.sum("n_y").cast("bigint").alias("_ty"),
         F.sum(F.col("n") - F.col("n_y")).cast("bigint").alias("_tn"),
-        F.count_distinct("modalidade_pagamento").cast("bigint").alias("_nm"),
-        F.count_distinct("faixa_valor").cast("bigint").alias("_nf"),
+        # set sizes, not count_distinct (see cramers_v_modality_approval)
+        F.size(F.collect_set("modalidade_pagamento")).cast("bigint").alias("_nm"),
+        F.size(F.collect_set("faixa_valor")).cast("bigint").alias("_nf"),
     )
 
     def _llr(cnt_y, cnt_n, tot_y, tot_n, k):

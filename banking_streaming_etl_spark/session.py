@@ -8,9 +8,20 @@ so we enable AQE (batch-only effect), pin the session timezone to UTC so
 DuckDB-oracle comparisons are stable, and size shuffle partitions to the
 local core count instead of the 200 default.
 
+It also sizes Spark's generated-code class cache to the working set of
+an analyst session (`CODEGEN_CACHE_MAX_ENTRIES`). A dashboard refresh
+re-plans the same queries, and each plan's generated classes are looked
+up in that cache by source text; at Spark's default of 100 entries a
+pass over the dashboard, views and stats families (~190 classes) missed
+on nearly every lookup and Janino-compiled ~143 classes again per pass.
+The generated class names also leave out the codegen stage id, which
+AQE assigns in the order concurrent stages finish.
+
 At cluster scale the same builder applies; only `master`, memory and
 `spark.sql.shuffle.partitions` change (partitions ≈ 2-3× total cores;
-AQE coalescing trims the excess at runtime).
+AQE coalescing trims the excess at runtime). The class cache is a static
+conf: it reaches every executor JVM through SparkConf, and each JVM keeps
+its own cache.
 """
 
 from __future__ import annotations
@@ -21,6 +32,25 @@ import sys
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: `spark.sql.codegen.cache.maxEntries` (Spark's default is 100). Regime:
+#: one interactive session that cycles through the dashboard, views and
+#: stats families (~190 generated classes per pass, counted with
+#: `codegen_compiles`) plus the streaming query. At 100 entries the LRU
+#: thrashed and each warm pass recompiled ~143 classes; at this size a
+#: warm pass compiles none. Not sized to the whole registry (~3,900
+#: classes for one call of every query): cached classes keep their JIT
+#: code alive, and a full code heap switches the JIT off (SCALING.md,
+#: "Known costs").
+CODEGEN_CACHE_MAX_ENTRIES = 1024
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far (cache
+    hits are not counted): the difference across a query is its compile
+    count."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def get_spark(
@@ -53,6 +83,16 @@ def get_spark(
         .config("spark.pyspark.python", sys.executable)
         .config("spark.pyspark.driver.python", sys.executable)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
+        # The class cache is keyed by source text, and by default the
+        # source names its whole-stage codegen stage id. AQE numbers the
+        # stages it re-plans in the order their inputs finish, so two
+        # runs of one plan can get permuted ids and compile the same
+        # code again (naive_bayes_approval, theil_sen_hourly_trend).
+        # Without the id, equal code is one cache entry.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # AQE: runtime re-planning — coalesce small shuffle partitions,
         # convert to broadcast joins when runtime stats allow, split skew.
         .config("spark.sql.adaptive.enabled", "true")

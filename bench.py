@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from banking_streaming_etl_spark import registry
-from banking_streaming_etl_spark.session import get_spark
+from banking_streaming_etl_spark.session import codegen_compiles, get_spark
 
 #: headline set — flagship + the heaviest operator families. Queries not
 #: yet registered are skipped silently so bench.py never breaks mid-build.
@@ -424,9 +424,11 @@ def _is_clean_run(
 def _time_headline(
     spark, queries, names, sf_dir: str, repeats: int = 1,
     clear_cache_between: bool = False,
-) -> tuple[dict[str, float], dict[str, float], dict[str, list[float]]]:
-    """Time each query `repeats` times; return (median, min, raw samples)
-    per query.
+) -> tuple[
+    dict[str, float], dict[str, float], dict[str, list[float]], dict[str, int]
+]:
+    """Time each query `repeats` times; return (median, min, raw samples,
+    codegen compiles over all samples) per query.
 
     One sample per query cannot distinguish a plan regression from
     sandbox noise (the round-4 +28% headline mystery) — the comparable
@@ -434,19 +436,24 @@ def _time_headline(
     JSON so run-to-run variance stays visible. The RAW in-order samples
     go to BENCH_DETAIL.md (round-6 verdict task #8) so the next drift
     diagnosis can separate variance (spread within a query's samples)
-    from level shifts (all samples moved) without re-running."""
+    from level shifts (all samples moved) without re-running. The
+    compile counts (classes Janino compiled, not served by the
+    generated-code cache) go to BENCH_DETAIL.md only."""
     med: dict[str, float] = {}
     mins: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
+    compiles: dict[str, int] = {}
     for name in names:
         fn = queries[name].fn
         samples: list[float] = []
         n = -1
+        c0 = codegen_compiles(spark)
         for _ in range(repeats):
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             n = df.count()
             samples.append(time.perf_counter() - t0)
+        compiles[name] = codegen_compiles(spark) - c0
         # the EXTRA sweep accumulates every query's session-lifetime lazy
         # persists; ~50 cached sf0.1 frames overflow any fixed heap, so
         # that group evicts between queries (timings there are cold-cache
@@ -462,7 +469,7 @@ def _time_headline(
             f"{repeats} run(s) (min {mins[name]:.3f}s)",
             file=sys.stderr,
         )
-    return med, mins, raw
+    return med, mins, raw, compiles
 
 
 def bench_ivf_pq_split(spark, sf_dir: str) -> tuple[float, float]:
@@ -622,7 +629,7 @@ def main() -> None:
     names = [n for n in HEADLINE if n in queries]
 
     _warm(spark, queries, sf_dir)
-    timings, timings_min, timings_raw = _time_headline(
+    timings, timings_min, timings_raw, compiles = _time_headline(
         spark, queries, names, sf_dir, repeats=3
     )
 
@@ -650,13 +657,16 @@ def main() -> None:
     # near-linear scaling expected; a super-linear query is a red flag.
     sf001_total = None
     timings_sf001: dict[str, float] = {}
+    compiles_sf001: dict[str, int] = {}
     sf001_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
     if os.path.isdir(sf001_dir) and os.path.abspath(sf001_dir) != os.path.abspath(
         sf_dir.rstrip("/")
     ):
         print(f"# scale curve: re-running headline at {sf001_dir}", file=sys.stderr)
         _warm(spark, queries, sf001_dir)
-        timings_sf001, _, _ = _time_headline(spark, queries, names, sf001_dir)
+        timings_sf001, _, _, compiles_sf001 = _time_headline(
+            spark, queries, names, sf001_dir
+        )
         sf001_total = round(sum(timings_sf001.values()), 4)
 
     # extension families LAST: headline totals and the streaming replay
@@ -667,7 +677,9 @@ def main() -> None:
     # in EXTENDED reads the shared ASC rank): per-query timings measure
     # the operator, not whoever ran first paying the shared build
     _warm_family_memos(spark, sf_dir)
-    ext_timings, _, _ = _time_headline(spark, queries, ext_names, sf_dir)
+    ext_timings, _, _, ext_compiles = _time_headline(
+        spark, queries, ext_names, sf_dir
+    )
     ext_total = round(sum(ext_timings.values()), 4)
     # EXTRA = pinned comparable core + half of the rotating remainder
     # (rotation keyed on the round count unless overridden) — named
@@ -696,7 +708,7 @@ def main() -> None:
     )
     extra_names = [n for n in EXTRA_CORE + rotating if n in queries]
     print("# extra group (stderr/detail-file only)", file=sys.stderr)
-    extra_timings, _, _ = _time_headline(
+    extra_timings, _, _, extra_compiles = _time_headline(
         spark, queries, extra_names, sf_dir, clear_cache_between=True
     )
     extra_core_total = round(
@@ -769,6 +781,12 @@ def main() -> None:
         queries_sf001=timings_sf001,
         queries_extended=ext_timings,
         queries_extra=extra_timings,
+        codegen_compiles={
+            "headline": compiles,
+            "sf001": compiles_sf001,
+            "extended": ext_compiles,
+            "extra": extra_compiles,
+        },
         bpe_note=bpe_note,
     )
     print(emit_json_line(payload))

@@ -25,6 +25,36 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def persisted_rdd_ids(spark):
+    """The ids of the persisted RDDs once nothing unreferenced is left
+    to release: run a Python and a JVM GC until two rounds in a row give
+    the same ids. Spark's ContextCleaner unpersists an RDD whose last
+    reference is collected, at its own pace, so in a long session a
+    bare count can fall between two reads while garbage of earlier
+    tests is cleaned. Compare ids, not counts: a pin made since an
+    earlier read is an id that read did not have, whatever else was
+    released in between."""
+    import gc
+    import time
+
+    jsc = spark.sparkContext._jsc
+
+    def ids() -> set[int]:
+        last = None
+        for _ in range(20):
+            gc.collect()
+            spark._jvm.System.gc()
+            time.sleep(0.5)
+            now = {int(k) for k in jsc.getPersistentRDDs().keys()}
+            if now == last:
+                break
+            last = now
+        return now
+
+    return ids
+
+
 @pytest.fixture(scope="session")
 def duck():
     from banking_streaming_etl_spark.oracle import duckdb_connect

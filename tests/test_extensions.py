@@ -541,18 +541,21 @@ def test_graph_push_modes_identical(spark, monkeypatch):
     assert results["bcast"] == results["shuffle"]
 
 
-def test_payer_hits_releases_superseded_push_pins(spark):
+def test_payer_hits_releases_superseded_push_pins(spark, persisted_rdd_ids):
     """Lifecycle: every HITS push pins its aggregate, but once the loop
     has run only the pins the returned plan reads may survive — the node
     checkpoint and the last two push aggregates (under the authority and
-    hub frames). The first call warms the session's shared inputs."""
+    hub frames). The first call warms the session's shared inputs. Both
+    frames are held, and the second call's pins are the RDD ids the
+    first read did not have, so no release in between hides one."""
     from banking_streaming_etl_spark.operators import graph
 
-    sc = spark.sparkContext
-    graph.payer_hits(spark, SF).collect()
-    before = len(sc._jsc.getPersistentRDDs())
-    graph.payer_hits(spark, SF).collect()
-    assert len(sc._jsc.getPersistentRDDs()) - before <= 1 + 2
+    first = graph.payer_hits(spark, SF)
+    first.collect()
+    before = persisted_rdd_ids()
+    second = graph.payer_hits(spark, SF)
+    second.collect()
+    assert len(persisted_rdd_ids() - before) <= 1 + 2
 
 
 def test_pagerank_sanity(spark):

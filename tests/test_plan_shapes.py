@@ -103,7 +103,10 @@ _CONTINGENCY_FAMILY = (
 
 #: builders that read a session pin instead of pinning per call: the
 #: other contingency-kernel readers, the readers of the pinned hourly
-#: count series, and four builders with one pinned group table each
+#: count series, four builders with one pinned group table each, and
+#: five builders outside the stats family (the audit's per-table
+#: aggregates, the KMV sketches, the scored fact, the SCD2 dim and the
+#: PIT history)
 _SESSION_PIN_READERS = (
     "js_divergence_value_by_approval",
     "loo_target_encode_modality",
@@ -119,6 +122,11 @@ _SESSION_PIN_READERS = (
     "anova_value_by_modality",
     "stratified_ate_balance_gate",
     "neyman_allocation",
+    "data_contract_audit",
+    "kmv_modality_overlap",
+    "score_recombination",
+    "scd2_user_history",
+    "pit_balance_feature_join",
 )
 
 
@@ -158,24 +166,66 @@ def test_contingency_family_rebuilds_run_no_jobs(spark):
         assert sc._jsc.sc().dagScheduler().nextJobId() == before, name
 
 
-def test_analyst_session_pins_do_not_grow_across_passes(spark):
+def test_analyst_session_pins_do_not_grow_across_passes(
+    spark, persisted_rdd_ids
+):
     """Lifecycle: the dashboard's analyses and views, the contingency
     family and the other session-pin readers pin their shared frames
-    once per session. A second pass over the same queries adds no
-    persisted RDD — no per-call pin survives its query."""
-    names = (
+    once per session. Later passes over the same queries add no
+    persisted RDD — no per-call pin survives its query. Every returned
+    frame is held to the end, so a per-call pin cannot hide by being
+    garbage-collected, and the check compares RDD ids, so pins of
+    earlier tests released meanwhile cannot hide one either.
+
+    Codegen: in the third pass the analyst session's queries (the
+    dashboard, its views and the contingency family) compile no class.
+    Each pass generates the same code, and the session's class cache
+    (session.CODEGEN_CACHE_MAX_ENTRIES) holds the working set; at
+    Spark's default of 100 entries every pass recompiled ~140 classes.
+    Two kinds of repeat-call compiles used to differ from the cold
+    call's code:
+
+    - naive_bayes_approval (8, then 2 classes) and theil_sen_hourly_trend
+      recompiled whole-stage classes that differed only in the codegen
+      stage id in the class name. AQE numbers the stages it re-plans in
+      the order their concurrent inputs finish, so the ids permute from
+      call to call. The session leaves the id out of the class name.
+    - cramers_v_modality_approval (6) and naive_bayes_approval
+      recompiled the Expand stage with its partial aggregate, the final
+      aggregate and two shuffle-key projections, with the two
+      distinct-count groups in the other order: the distinct-aggregate
+      rewrite orders its groups by a hash of fresh expression ids. Both
+      now count distinct values as the size of a collected set.
+
+    The compile count covers the analyst queries only. Among the other
+    readers, kmv_modality_overlap and score_recombination have AQE plans
+    that vary with which concurrent stage finishes first (a join or
+    aggregate picked at run time), and each variant compiles once when
+    it first occurs — kmv had three variants, met in any pass."""
+    from banking_streaming_etl_spark import session
+
+    analyst = (
         _DASHBOARD_ANALYSES
         + ("perf_stats_by_modality", "perf_temporal_hourly")
         + _CONTINGENCY_FAMILY
-        + _SESSION_PIN_READERS
     )
-    sc = spark.sparkContext
+    held = []
     pinned = []
-    for _ in range(2):
-        for name in names:
-            _query(spark, name).collect()
-        pinned.append(len(sc._jsc.getPersistentRDDs()))
-    assert pinned[1] == pinned[0], pinned
+    compiles = []
+    for _ in range(3):
+        n = 0
+        for name in analyst + _SESSION_PIN_READERS:
+            before = session.codegen_compiles(spark)
+            df = _query(spark, name)
+            df.collect()
+            held.append(df)
+            if name in analyst:
+                n += session.codegen_compiles(spark) - before
+        compiles.append(n)
+        pinned.append(persisted_rdd_ids())
+    assert pinned[1] - pinned[0] == set(), "pass 2 pinned new RDDs"
+    assert pinned[2] - pinned[0] == set(), "pass 3 pinned new RDDs"
+    assert compiles[2] == 0, compiles
 
 
 def test_near_dup_lsh_is_bucketed_not_all_pairs(spark):

@@ -1,6 +1,8 @@
 """Profile registered queries: split wall time into plan-build (fn call,
 which includes eager memo/checkpoint work), first action, and a warm
-second action. Mimics bench's extra-sweep protocol (clearCache between
+second action, each with the number of classes Janino compiled in it
+(`compiles=build/first/second`; the generated-code cache serves the
+rest). Mimics bench's extra-sweep protocol (clearCache between
 queries) so numbers line up with BENCH_DETAIL's queries_extra.
 
 Usage: python tools/profile_queries.py [--sf DIR] [--repeat N] names...
@@ -15,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from banking_streaming_etl_spark import registry
-from banking_streaming_etl_spark.session import get_spark
+from banking_streaming_etl_spark.session import codegen_compiles, get_spark
 
 
 def main() -> None:
@@ -52,18 +54,23 @@ def main() -> None:
         for r in range(repeat):
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"profile:{name}")
+            c0 = codegen_compiles(spark)
             tb0 = time.perf_counter()
             df = queries[name].fn(spark, sf_dir)
             tb = time.perf_counter() - tb0
+            c1 = codegen_compiles(spark)
             tc0 = time.perf_counter()
             n = df.count()
             tc = time.perf_counter() - tc0
+            c2 = codegen_compiles(spark)
             tw0 = time.perf_counter()
             df.count()
             tw = time.perf_counter() - tw0
+            c3 = codegen_compiles(spark)
             print(
                 f"{name}\trun{r}\tbuild={tb:.3f}\tfirst_count={tc:.3f}\t"
-                f"warm_count={tw:.3f}\ttotal={tb+tc:.3f}\trows={n}"
+                f"warm_count={tw:.3f}\ttotal={tb+tc:.3f}\trows={n}\t"
+                f"compiles={c1-c0}/{c2-c1}/{c3-c2}"
             )
             spark.sparkContext.setJobDescription(None)
 
