@@ -12,10 +12,12 @@ union + window"):
   joins on the key; the history rewrite is partition-parallel.
 - `CdcUpsertSink`: streaming foreachBatch last-write-wins upsert keyed on
   the record id — reduce each micro-batch to one row per key (max_by on
-  event time), anti-join the current snapshot, write the union. With the
-  epoch-keyed idempotence pattern of sinks.write_epoch (behind
-  sinks.IdempotentParquetSink) this is the JDBC-upsert analogue the
-  reference deferred (PDF p. 8).
+  event time), anti-join the current snapshot, write the union — the
+  JDBC-upsert analogue the reference deferred (PDF p. 8). It needs no
+  epoch key: re-applying a replayed epoch's winners under event-time
+  last-write-wins leaves the snapshot unchanged, whereas the append and
+  additive sinks replace their epoch's own `batch_id=N` directory
+  through `sinks.write_epoch`.
 """
 
 from __future__ import annotations

@@ -70,6 +70,7 @@ def get_spark(
     # gateway ignores it, which is fine: each CLI/pytest process launches
     # its own JVM. On a real cluster this is the executor-memory knob.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
+    package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -82,6 +83,11 @@ def get_spark(
         # interpreter running the driver program.
         .config("spark.pyspark.python", sys.executable)
         .config("spark.pyspark.driver.python", sys.executable)
+        # ... and let them import this package wherever the driver was
+        # started: a script that put the package on `sys.path` by hand
+        # leaves the workers (started in the driver's working directory)
+        # without it, and their unpickled functions fail to import.
+        .config("spark.executorEnv.PYTHONPATH", package_parent)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config(
             "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)

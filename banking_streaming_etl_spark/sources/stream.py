@@ -9,7 +9,8 @@ from_json against the 7-field transaction StructType
 This module provides:
 - `transaction_schema()` — the explicit wire StructType.
 - `write_replay_chunks()` — serialize the driver's events table into N
-  JSON-lines chunks (the producer's wire format, producer.py:106-114).
+  JSON-lines chunks (the producer's wire format, producer.py:106-114;
+  `_wire_value` builds the line for both replay writers).
 - `read_transaction_stream()` — file-stream the chunks and parse exactly
   like the reference: raw string -> from_json -> select("dados.*") plus a
   processing-time ingest mark (tempo_entrada_kafka analogue).
@@ -45,6 +46,25 @@ def transaction_schema() -> T.StructType:
     )
 
 
+def _wire_value() -> Column:
+    """The producer's wire line for one `transactions` row: the 7 wire
+    fields as a JSON object, the timestamp as an ISO-8601 string
+    (producer.py:99,162), aliased `value` like a Kafka record's."""
+    return F.to_json(
+        F.struct(
+            "id_transacao",
+            "id_usuario_pagador",
+            "id_usuario_recebedor",
+            "id_regiao",
+            "modalidade_pagamento",
+            F.date_format(
+                "data_horario", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+            ).alias("data_horario"),
+            "valor_transacao",
+        )
+    ).alias("value")
+
+
 def write_replay_chunks(
     spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 8
 ) -> int:
@@ -55,22 +75,7 @@ def write_replay_chunks(
     cached envelope — no second derivation of the events table).
     """
     t = datamodel.transactions(spark, sf_dir)
-    envelope = t.select(
-        F.to_json(
-            F.struct(
-                "id_transacao",
-                "id_usuario_pagador",
-                "id_usuario_recebedor",
-                "id_regiao",
-                "modalidade_pagamento",
-                F.date_format(
-                    "data_horario", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-                ).alias("data_horario"),
-                "valor_transacao",
-            )
-        ).alias("value")
-    )
-    envelope = envelope.cache()
+    envelope = t.select(_wire_value()).cache()
     n = envelope.count()
     envelope.repartition(n_chunks).write.mode("overwrite").text(out_dir)
     envelope.unpersist()
@@ -274,19 +279,7 @@ def write_replay_chunks_ordered(
     envelope = t.select(
         F.col("data_horario").alias("_ts"),
         F.col("id_transacao").alias("_id"),
-        F.to_json(
-            F.struct(
-                "id_transacao",
-                "id_usuario_pagador",
-                "id_usuario_recebedor",
-                "id_regiao",
-                "modalidade_pagamento",
-                F.date_format(
-                    "data_horario", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-                ).alias("data_horario"),
-                "valor_transacao",
-            )
-        ).alias("value"),
+        _wire_value(),
     )
     from pyspark.sql import Window as W
 

@@ -9,8 +9,15 @@ Streaming:
   multi-sink (K1): history parquet + scores parquet + recent-transactions
   KV view, with persist()/unpersist() around the reuse. Unlike the
   reference's at-least-once JDBC appends, history and scores are written
-  epoch-keyed (`sinks.write_epoch`, a trailing `batch_id` partition
+  epoch-keyed (`sinks.write_epoch`: each epoch overwrites its own
+  `batch_id=N` directory, read back as a trailing `batch_id` partition
   column), so a retried epoch replaces its rows: effectively-once.
+
+The exit stamp (`tempo_saida_resultado` and the two latency columns) is
+one function, `with_exit_stamp`: the query applies it, and the sink
+applies it again where current_timestamp() is the sink job's wall clock.
+The sink's three per-batch jobs run on pool threads that inherit the
+query's job group.
 
 Batch/stream unification: the transform body is the SAME code the batch
 flagship uses (plans/approval.with_scores / with_approval_flags) — written
@@ -50,8 +57,8 @@ WATERMARK_DELAY = "10 minutes"  # streaming_etl.py:61
 #: (so in-query `tempo_saida - tempo_inicio` is always 0 — true of the
 #: reference's own tempo_processamento_ms too, streaming_etl.py:173-174).
 #: Real latency therefore gets stamped at the SINK: start_multi_sink
-#: re-evaluates tempo_saida_resultado and the *_ms columns inside
-#: foreachBatch, where current_timestamp() reflects sink-job wall clock.
+#: applies `with_exit_stamp` again inside foreachBatch, where
+#: current_timestamp() reflects sink-job wall clock.
 #: With a Kafka source tempo_entrada_kafka is per-row broker metadata and
 #: latencia_total_ms is genuinely per-row; with the file-replay source the
 #: ingest mark is itself the batch timestamp, so latency is batch-granular.
@@ -101,9 +108,19 @@ def approval_stream(
     ).withColumn("tempo_inicio_processamento", F.current_timestamp())
     enriched = enrich(marked, users_df, regions_df)
 
-    out = with_approval_flags(with_scores(enriched))
-    out = (
-        out.withColumn("tempo_saida_resultado", F.current_timestamp())
+    out = with_exit_stamp(with_approval_flags(with_scores(enriched)))
+    return out.select(*OUTPUT_COLUMNS)
+
+
+def with_exit_stamp(df: DataFrame) -> DataFrame:
+    """(Re)stamp the output mark `tempo_saida_resultado` with
+    `current_timestamp()` and derive the two latency columns from it
+    (P4/F11/F12). Inside the streaming query
+    the mark is the batch timestamp; `start_multi_sink` applies it again
+    in foreachBatch, where it is the sink job's wall clock (see the
+    OUTPUT_COLUMNS note)."""
+    return (
+        df.withColumn("tempo_saida_resultado", F.current_timestamp())
         .withColumn(
             "latencia_total_ms",
             F.unix_millis(F.col("tempo_saida_resultado"))
@@ -115,7 +132,6 @@ def approval_stream(
             - F.unix_millis(F.col("tempo_inicio_processamento")),
         )
     )
-    return out.select(*OUTPUT_COLUMNS)
 
 
 @dataclass
@@ -167,7 +183,7 @@ def start_multi_sink(
     - history parquet = the JDBC `transacoes` table (K2)
     - 4-column scores projection = `transacoes_scores` (P5)
     - both written by `sinks.write_epoch` into their epoch's `batch_id=N`
-      partition: an epoch retried after a failed write (say scores failed
+      directory: an epoch retried after a failed write (say scores failed
       after history committed) overwrites its own partitions instead of
       appending a second copy, so each id lands once in each sink
     - per-batch top-K into the KV view = the Redis zset+hash (K3/K4); the
@@ -187,25 +203,13 @@ def start_multi_sink(
     # writes (guide §2.6) instead of running serially after them.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # re-stamp the output mark with SINK-side wall clock: inside the
-        # streaming query current_timestamp() collapsed to the batch
-        # timestamp (see OUTPUT_COLUMNS note), so the in-query *_ms columns
-        # are zero; here batch_df is a plain batch frame and
-        # current_timestamp() is the sink job's time.
-        batch_df = (
-            batch_df.withColumn("tempo_saida_resultado", F.current_timestamp())
-            .withColumn(
-                "latencia_total_ms",
-                F.unix_millis(F.col("tempo_saida_resultado"))
-                - F.unix_millis(F.col("tempo_entrada_kafka")),
-            )
-            .withColumn(
-                "tempo_processamento_ms",
-                F.unix_millis(F.col("tempo_saida_resultado"))
-                - F.unix_millis(F.col("tempo_inicio_processamento")),
-            )
-        )
+        # inside the streaming query current_timestamp() collapsed to the
+        # batch timestamp; batch_df is a plain batch frame, so here the
+        # mark is the sink job's time
+        batch_df = with_exit_stamp(batch_df)
         batch_df.persist()
         try:
             # The two sink writes AND the bounded top-K collect are
@@ -243,14 +247,20 @@ def start_multi_sink(
                 )
                 return [r.asDict() for r in top]
 
+            # pool threads start with no local properties; the wrapper
+            # copies this thread's (the query's job group among them), so
+            # the batch's jobs stay attributable and query.stop() can
+            # cancel them
+            inherit = inheritable_thread_target(batch_df.sparkSession)
+            write = inherit(write_epoch)
             n_jobs = 2 if recent_view is None else 3
             with ThreadPoolExecutor(max_workers=n_jobs) as pool:
                 futs = [
-                    pool.submit(write_epoch, batch_df, history_dir, epoch_id),
-                    pool.submit(write_epoch, scores, scores_dir, epoch_id),
+                    pool.submit(write, batch_df, history_dir, epoch_id),
+                    pool.submit(write, scores, scores_dir, epoch_id),
                 ]
                 if recent_view is not None:
-                    futs.append(pool.submit(_recent))
+                    futs.append(pool.submit(inherit(_recent)))
                 errs = []
                 for f in futs:
                     try:

@@ -4,18 +4,21 @@ The reference's JDBC append inside foreachBatch is at-least-once: a batch
 retried after a sink failure writes its rows twice (acknowledged as
 deferred design work, PDF p. 8). Every foreachBatch sink of this package
 closes that gap with ONE epoch-keyed writer, `write_epoch`: each
-micro-batch lands in its own `batch_id=N` partition via dynamic-partition
-overwrite, so a replayed epoch OVERWRITES its own partition instead of
-appending a duplicate. Combined with checkpointed offsets this yields
-effectively-once output — the same pattern a JDBC sink would implement
-with `DELETE WHERE batch_id = N` + insert in one transaction.
+micro-batch overwrites its own `batch_id=N` leaf directory, so a replayed
+epoch REPLACES its own output instead of appending a duplicate, and no
+other epoch's directory is touched. Combined with checkpointed offsets
+this yields effectively-once output — the same pattern a JDBC sink would
+implement with `DELETE WHERE batch_id = N` + insert in one transaction.
 
 The writer serves the flagship multi-sink (`pipeline.start_multi_sink`:
 history and scores), `IdempotentParquetSink`, the materialized aggregate
 and join views and the quantile-sketch store; every one of them starts
 through `start_foreach_batch`, and the two views share one crash-safe
-compaction swap (`_compact_epochs` / `_recover_compact`). Readers see the
-epoch as a trailing `batch_id` partition column.
+compaction swap (`_compact_epochs` / `_recover_compact`), which writes
+its folded store through `write_epoch` too. Readers see the epoch as a
+trailing `batch_id` int partition column, discovered from the directory
+names. An epoch with no rows still leaves a zero-row part file (with the
+schema) in its directory.
 """
 
 from __future__ import annotations
@@ -31,16 +34,11 @@ from pyspark.sql.streaming import StreamingQuery
 
 
 def write_epoch(df: DataFrame, path: str, epoch_id: int) -> None:
-    """Land `df` as the `batch_id=epoch_id` partition of the parquet
-    store at `path`, replacing whatever an earlier attempt of the same
-    epoch left there and no other partition."""
-    (
-        df.withColumn("batch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
+    """Land `df` as the `batch_id=epoch_id` leaf of the parquet store at
+    `path`, replacing whatever an earlier attempt of the same epoch left
+    there and no other epoch. `df` must not carry a `batch_id` column:
+    the directory name is the column."""
+    df.write.mode("overwrite").parquet(f"{path}/batch_id={int(epoch_id)}")
 
 
 def start_foreach_batch(
@@ -91,13 +89,7 @@ def _compact_epochs(folded: DataFrame, path: str) -> None:
     and the promote leaves no live dir; `_recover_compact` restores the
     backup on the next read or write."""
     tmp = path + "__compact"
-    (
-        folded.drop("batch_id")
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(tmp)
-    )
+    write_epoch(folded.drop("batch_id"), tmp, -1)
     backup = path + "__old"
     if os.path.exists(backup):
         shutil.rmtree(backup)
@@ -107,7 +99,8 @@ def _compact_epochs(folded: DataFrame, path: str) -> None:
 
 
 class IdempotentParquetSink:
-    """foreachBatch writer with epoch-keyed dynamic-partition overwrite."""
+    """foreachBatch writer: each epoch overwrites its own `batch_id=N`
+    leaf (`write_epoch`)."""
 
     def __init__(self, out_dir: str, columns: list[str] | None = None):
         self.out_dir = out_dir
@@ -386,7 +379,7 @@ class MaterializedJoinView:
 
     Exactly-once under replay, same epoch-keyed discipline as the other
     sinks in this file: the input deltas AND the view delta for epoch N
-    each land in their own `batch_id=N` partition via dynamic overwrite,
+    each overwrite their own `batch_id=N` leaf via `write_epoch`,
     and dV_N is recomputed only from input partitions < N / <= N — a
     replayed epoch overwrites all three of its partitions with identical
     content for ANY retry timing (streaming replays only ever re-run the

@@ -7,17 +7,15 @@ the JVM state store (RocksDB-backed on a cluster), partitioned by the group
 key, with watermark-driven eviction — the per-user state path at any scale:
 
 - `last_tx_per_user`: streaming max_by aggregation in update mode — state
-  is one row per user.
+  is one row per user. It is the one implementation of that contract.
 - `running_user_totals`: streaming sum/count per user (update mode).
 - `dedup_within_watermark` lives in streaming/windows.py (same family).
 
-For ad-hoc per-group logic Spark offers transformWithStateInPandas /
-applyInPandasWithState; they remain the slow path and every stateful
-requirement in this engine's surface maps to JVM-native aggregations.
-`last_tx_per_user_pandas_state` exists as the API-parity twin (U3): the
-reference's failed experiment re-done correctly — Arrow-batched group
-iteration with scalar state, not per-row serde — differential-tested
-against the JVM operator so the two paths can never drift.
+Every stateful requirement in this engine's surface maps to a JVM-native
+aggregation except one: `transition_counts_stream` needs the previous
+event of each user, which no commutative combine can carry, so it is
+the one use of applyInPandasWithState (U3) — Arrow-batched group
+iteration with scalar state, not the reference's per-row serde.
 """
 
 from __future__ import annotations
@@ -56,90 +54,6 @@ def last_approved_tx_per_user(approved_stream: DataFrame) -> DataFrame:
     )
 
 
-#: output contract shared by both last-tx implementations.
-_LAST_TX_SCHEMA = T.StructType(
-    [
-        T.StructField("id_usuario_pagador", T.LongType()),
-        T.StructField("data_horario", T.TimestampType()),
-        T.StructField("id_transacao", T.LongType()),
-        T.StructField("valor_transacao", T.DoubleType()),
-        T.StructField("transacao_aprovada", T.BooleanType()),
-    ]
-)
-
-
-def last_tx_per_user_pandas_state(approved_stream: DataFrame) -> DataFrame:
-    """U3 twin of `last_tx_per_user` via applyInPandasWithState.
-
-    Same semantics (argmax over (event time, id) per user, update mode),
-    custom-state implementation: per micro-batch each group's rows arrive
-    as Arrow record batches; state is one scalar tuple per user (event
-    time stored as epoch-micros — primitives round-trip the state store
-    cheaply). This is how the reference SHOULD have built its removed
-    "last approved tx" feature (SURVEY.md §4.4: its per-row pandas state
-    hit >60 s micro-batches); still, prefer the JVM `last_tx_per_user`
-    unless the per-group logic genuinely can't be an aggregation."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("id_transacao", T.LongType()),
-            T.StructField("valor_transacao", T.DoubleType()),
-            T.StructField("transacao_aprovada", T.BooleanType()),
-        ]
-    )
-
-    def fn(key, pdfs, state):
-        best = tuple(state.get) if state.exists else None
-        for pdf in pdfs:
-            for ts, txid, val, ap in zip(
-                pdf["data_horario"],
-                pdf["id_transacao"],
-                pdf["valor_transacao"],
-                pdf["transacao_aprovada"],
-            ):
-                cand = (
-                    int(pd.Timestamp(ts).value // 1000),
-                    int(txid),
-                    float(val),
-                    bool(ap),
-                )
-                if best is None or cand[:2] > best[:2]:
-                    best = cand
-        state.update(best)
-        yield pd.DataFrame(
-            [
-                {
-                    "id_usuario_pagador": key[0],
-                    "data_horario": pd.Timestamp(best[0] * 1000),
-                    "id_transacao": best[1],
-                    "valor_transacao": best[2],
-                    "transacao_aprovada": best[3],
-                }
-            ]
-        )
-
-    return (
-        approved_stream.select(
-            "id_usuario_pagador",
-            "data_horario",
-            "id_transacao",
-            "valor_transacao",
-            "transacao_aprovada",
-        )
-        .groupBy("id_usuario_pagador")
-        .applyInPandasWithState(
-            fn,
-            _LAST_TX_SCHEMA,
-            state_schema,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def running_user_totals(approved_stream: DataFrame) -> DataFrame:
     """Per-user running count/sum/approval-rate (update mode)."""
     return approved_stream.groupBy("id_usuario_pagador").agg(
@@ -148,80 +62,6 @@ def running_user_totals(approved_stream: DataFrame) -> DataFrame:
         F.avg(F.col("transacao_aprovada").cast("double")).alias(
             "taxa_aprovacao"
         ),
-    )
-
-
-def last_tx_per_user_tws(approved_stream: DataFrame) -> DataFrame:
-    """Third implementation of the same contract, on Spark 4's
-    transformWithStateInPandas — the successor API to
-    applyInPandasWithState (typed state handles, timers, multiple state
-    variables per processor). Same argmax-per-user semantics, value
-    state = one scalar tuple per user; differential-tested against the
-    JVM operator like the applyInPandasWithState twin, so all three
-    paths are pinned to each other.
-
-    Environment gate: the transformWithState Python runner needs a
-    working google.protobuf and the RocksDB state-store provider; this
-    container ships neither, so the test pins the loud failure mode
-    (query start raises) and runs the differential where the deps
-    exist."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("id_transacao", T.LongType()),
-            T.StructField("valor_transacao", T.DoubleType()),
-            T.StructField("transacao_aprovada", T.BooleanType()),
-        ]
-    )
-
-    class LastTxProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("ultima", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            best = tuple(self._last.get()) if self._last.exists() else None
-            for pdf in rows:
-                for ts, txid, val, ap in zip(
-                    pdf["data_horario"],
-                    pdf["id_transacao"],
-                    pdf["valor_transacao"],
-                    pdf["transacao_aprovada"],
-                ):
-                    cand = (
-                        int(pd.Timestamp(ts).value // 1000),
-                        int(txid),
-                        float(val),
-                        bool(ap),
-                    )
-                    if best is None or cand[:2] > best[:2]:
-                        best = cand
-            self._last.update(best)
-            yield pd.DataFrame(
-                [
-                    {
-                        "id_usuario_pagador": key[0],
-                        "data_horario": pd.Timestamp(best[0] * 1000),
-                        "id_transacao": best[1],
-                        "valor_transacao": best[2],
-                        "transacao_aprovada": best[3],
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return approved_stream.groupBy("id_usuario_pagador").transformWithStateInPandas(
-        statefulProcessor=LastTxProcessor(),
-        outputStructType=_LAST_TX_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -5,6 +5,7 @@ the shapes the driver assumes."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -58,3 +59,33 @@ def test_bench_emits_one_json_line():
     assert payload["sf"] == 0.001
     assert "streaming_tx_per_s" in payload
     assert "streaming_replay" in payload["queries"]
+
+
+def test_arrow_query_runs_from_another_working_directory(tmp_path, sf_dir):
+    """A driver script started outside the repo that imports the package
+    through `sys.path`: an Arrow-batched query's Python workers must be
+    able to import the package too, so `get_spark` hands them its
+    path."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        "sys.path.insert(0, sys.argv[1])\n"
+        "from banking_streaming_etl_spark.session import get_spark\n"
+        "from banking_streaming_etl_spark.plans.batchdev import (\n"
+        "    avro_wire_roundtrip,\n"
+        ")\n"
+        "spark = get_spark(shuffle_partitions=2)\n"
+        "print(len(avro_wire_roundtrip(spark, sys.argv[2]).collect()))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script, repo, sf_dir],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert int(out.stdout.split()[-1]) > 0

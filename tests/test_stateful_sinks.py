@@ -66,51 +66,6 @@ def test_last_tx_per_user_matches_batch(spark, module_replay_dir):
     assert got == want
 
 
-def test_pandas_state_twin_matches_jvm_last_tx(spark, module_replay_dir):
-    """U3 differential: the applyInPandasWithState implementation must
-    land on the same final per-user winner as the JVM max_by operator.
-    In update mode the memory sink accumulates one row per (user, batch)
-    update; the final state per user = argmax over its emitted rows."""
-    out = stateful.last_tx_per_user_pandas_state(
-        _approval_stream(spark, module_replay_dir)
-    )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("last_tx_pandas")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("id_usuario_pagador").orderBy(
-        F.desc("data_horario"), F.desc("id_transacao")
-    )
-    got = {
-        (r.id_usuario_pagador, r.id_transacao, r.valor_transacao)
-        for r in spark.sql("SELECT * FROM last_tx_pandas")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .collect()
-    }
-    # the JVM twin's final snapshot (complete mode)
-    q2 = (
-        stateful.last_tx_per_user(_approval_stream(spark, module_replay_dir))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("last_tx_jvm_ref")
-        .start()
-    )
-    q2.processAllAvailable()
-    q2.stop()
-    want = {
-        (r.id_usuario_pagador, r.id_transacao, r.valor_transacao)
-        for r in spark.sql("SELECT * FROM last_tx_jvm_ref").collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_running_user_totals(spark, module_replay_dir):
     out = stateful.running_user_totals(
         _approval_stream(spark, module_replay_dir)
@@ -270,79 +225,6 @@ def test_restart_from_checkpoint_is_exactly_once(
     df = spark.read.parquet(str(tmp_path / "hist"))
     assert df.count() == 1000
     assert df.select("id_transacao").distinct().count() == 1000
-
-
-def test_transform_with_state_twin_matches_jvm_last_tx(
-    spark, module_replay_dir
-):
-    """transformWithStateInPandas twin. Its Python runner requires a
-    working google.protobuf (absent in this container) and the RocksDB
-    state-store provider; when the dependency is missing the query must
-    fail loudly at start (gate pinned), and where it IS available the
-    differential against the JVM operator below is the contract."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        from pyspark.errors.exceptions.captured import StreamingQueryException
-
-        out = stateful.last_tx_per_user_tws(
-            _approval_stream(spark, module_replay_dir)
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            with pytest.raises(StreamingQueryException):
-                q = (
-                    out.writeStream.outputMode("update")
-                    .format("memory")
-                    .queryName("last_tx_tws_gate")
-                    .start()
-                )
-                q.processAllAvailable()
-        finally:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        return
-
-    out = stateful.last_tx_per_user_tws(
-        _approval_stream(spark, module_replay_dir)
-    )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("last_tx_tws")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("id_usuario_pagador").orderBy(
-        F.desc("data_horario"), F.desc("id_transacao")
-    )
-    got = {
-        (r.id_usuario_pagador, r.id_transacao, r.valor_transacao)
-        for r in spark.sql("SELECT * FROM last_tx_tws")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .collect()
-    }
-    q2 = (
-        stateful.last_tx_per_user(_approval_stream(spark, module_replay_dir))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("last_tx_jvm_ref2")
-        .start()
-    )
-    q2.processAllAvailable()
-    q2.stop()
-    want = {
-        (r.id_usuario_pagador, r.id_transacao, r.valor_transacao)
-        for r in spark.sql("SELECT * FROM last_tx_jvm_ref2").collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_materialized_view_replay_and_compact(spark, tmp_path):
@@ -626,10 +508,10 @@ def _ivm_batch_pairs(spark):
 
 def test_materialized_join_view_replay_fold_and_attribution(spark, tmp_path):
     """Delta-join IVM law: for an arbitrary 3-epoch chunking (plus a
-    replayed epoch), the folded view equals the batch join bit-for-bit,
-    AND each pair sits in exactly the partition max(epoch_left,
-    epoch_right) — the closed form the oracle-backed
-    ivm_join_view_deltas query groups by."""
+    replayed epoch, and a first epoch with no alert rows), the folded
+    view equals the batch join bit-for-bit, AND each pair sits in
+    exactly the partition max(epoch_left, epoch_right) — the closed
+    form the oracle-backed ivm_join_view_deltas query groups by."""
     from banking_streaming_etl_spark.plans.relational import IVM_ALERT_VALUE
 
     view = sinks.MaterializedJoinView(str(tmp_path / "jv"), "id_usuario_pagador")
@@ -649,10 +531,22 @@ def test_materialized_join_view_replay_fold_and_attribution(spark, tmp_path):
         )
         return left, right
 
-    for epoch in (0, 1, 2):
-        view.write_batch(*_split(t, epoch), epoch_id=epoch)
+    # epoch 0 has no alert rows (chunk 0's alerts arrive with epoch 1):
+    # its empty right delta still leaves a zero-row leaf, so the alert
+    # store has epochs before it holds any alert
+    left0, late_alerts = _split(t, 0)
+    left1, right1 = _split(t, 1)
+    epochs = [
+        (left0, late_alerts.limit(0)),
+        (left1, right1.unionByName(late_alerts)),
+        _split(t, 2),
+    ]
+    for epoch, (left, right) in enumerate(epochs):
+        view.write_batch(left, right, epoch_id=epoch)
+        if epoch == 0:
+            assert sinks._has_epochs(str(tmp_path / "jv" / "right"))
         if epoch == 1:  # post-failure replay must overwrite, not append
-            view.write_batch(*_split(t, epoch), epoch_id=epoch)
+            view.write_batch(left, right, epoch_id=epoch)
 
     got = {
         (r.id_usuario_pagador, r.id_transacao, r.valor_transacao,
@@ -667,11 +561,13 @@ def test_materialized_join_view_replay_fold_and_attribution(spark, tmp_path):
     assert got == want and len(got) > 0
 
     # epoch-attribution: the partition each pair landed in is exactly
-    # max(epoch(tx), epoch(alert)) = max(id%3, id_alerta%3)
+    # max(epoch(tx), epoch(alert)) = max(id%3, id_alerta%3, 1), an
+    # alert's epoch being at least 1
     attributed = spark.read.parquet(str(tmp_path / "jv" / "view")).select(
         "batch_id",
-        (F.greatest(F.col("id_transacao") % 3, F.col("id_alerta") % 3))
-        .alias("want_epoch"),
+        F.greatest(
+            F.col("id_transacao") % 3, F.col("id_alerta") % 3, F.lit(1)
+        ).alias("want_epoch"),
     )
     assert attributed.filter(
         F.col("batch_id") != F.col("want_epoch")

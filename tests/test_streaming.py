@@ -169,6 +169,58 @@ def test_foreach_batch_multisink(spark, replay_dir, tmp_path):
     assert times == sorted(times, reverse=True)
 
 
+def test_multisink_warm_batch_jobs_and_compiles(spark, replay_dir, tmp_path):
+    """Two properties of a warm multi-sink batch, fed one replay file per
+    batch:
+
+    - every job is in the query's job group (its run id), the two sink
+      writes and the top-K collect included, though they run on pool
+      threads: query.stop() cancels a group, and a job outside it would
+      run on after the stop;
+    - it Janino-compiles only the classes whose source holds the
+      batch's folded current_timestamp() (the ingest and start marks in
+      the query, the exit stamp at the sink), 5 compiles in all; the
+      epoch id is a directory name, not a literal column, so the two
+      writes compile nothing new."""
+    import glob
+    import os
+
+    from banking_streaming_etl_spark.session import codegen_compiles
+
+    src = tmp_path / "src"
+    src.mkdir()
+    tx = stream_src.read_transaction_stream(spark, str(src))
+    out = spipe.approval_stream(
+        tx, datamodel.users(spark, SF), datamodel.regions(spark, SF)
+    )
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    q = spipe.start_multi_sink(
+        out,
+        history_dir=str(tmp_path / "hist"),
+        scores_dir=str(tmp_path / "scores"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        recent_view=spipe.RecentTransactionsView(capacity=500),
+        recent_k=50,
+    )
+    compiles = []
+    for i, f in enumerate(sorted(glob.glob(f"{replay_dir}/part-*"))):
+        before = codegen_compiles(spark)
+        shutil.copy(f, src / ".incoming")
+        os.rename(src / ".incoming", src / f"chunk{i}.json")
+        q.processAllAvailable()
+        compiles.append(codegen_compiles(spark) - before)
+    q.stop()
+
+    grouped = set(tracker.getJobIdsForGroup(str(q.runId)))
+    # per batch: two writes and one collect, besides the plan's own jobs
+    assert len(grouped) >= 3 * len(compiles)
+    # no job of the run's span is in another group or in none
+    assert set(range(min(grouped), max(grouped) + 1)) == grouped
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
+    assert compiles[1:] == [5] * (len(compiles) - 1), compiles
+
+
 def test_failed_sink_write_leaves_recent_view_untouched(
     spark, replay_dir, tmp_path
 ):
