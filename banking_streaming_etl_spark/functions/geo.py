@@ -38,10 +38,3 @@ def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
         f" * SIN(RADIANS({lon2} - {lon1}) / 2) * SIN(RADIANS({lon2} - {lon1}) / 2)"
         f"))"
     )
-
-
-def euclidean(lat1: str, lon1: str, lat2: str, lon2: str) -> Column:
-    """Flat-plane distance (the pipeline's t5 semantics)."""
-    dlat = F.col(lat1) - F.col(lat2)
-    dlon = F.col(lon1) - F.col(lon2)
-    return F.sqrt(dlat * dlat + dlon * dlon)

@@ -307,12 +307,6 @@ def _bucket_join(banded: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
-    """Band, hash, bucket-join an explicit signature frame (test/ad-hoc
-    surface; the registered path goes through the session memo)."""
-    return _bucket_join(_banded_signatures(signatures).cache())
-
-
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs with exact-Jaccard verification of the
     candidate set (so precision is exact; recall ~1 at J>=0.8 — see module

@@ -11,13 +11,12 @@ union + window"):
   append new versions, keep everything else. Two broadcast-or-shuffle
   joins on the key; the history rewrite is partition-parallel.
 - `CdcUpsertSink`: streaming foreachBatch last-write-wins upsert keyed on
-  the record id — reduce each micro-batch to one row per key (max_by on
-  event time), anti-join the current snapshot, write the union — the
-  JDBC-upsert analogue the reference deferred (PDF p. 8). It needs no
-  epoch key: re-applying a replayed epoch's winners under event-time
-  last-write-wins leaves the snapshot unchanged, whereas the append and
-  additive sinks replace their epoch's own `batch_id=N` directory
-  through `sinks.write_epoch`.
+  the record id, the JDBC-upsert analogue the reference deferred (PDF
+  p. 8). Each micro-batch's per-key winners (max_by on event time) land
+  in the epoch's own `batch_id=N` leaf through `sinks.write_epoch`, like
+  every other foreachBatch sink; the read side folds the leaves with the
+  same max_by, so a replayed epoch replaces its own leaf and a crash
+  never touches a committed one.
 """
 
 from __future__ import annotations
@@ -25,6 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+
+from banking_streaming_etl_spark.streaming.sinks import (
+    _compact_epochs,
+    _recover_compact,
+    write_epoch,
+)
 
 
 def scd2_init(dim: DataFrame, valid_from) -> DataFrame:
@@ -151,21 +156,26 @@ FROM users WHERE id_usuario % 10 = 0"""
 
 
 class CdcUpsertSink:
-    """Streaming last-write-wins upsert into a parquet snapshot.
+    """Streaming last-write-wins upsert, epoch-keyed.
 
-    Each micro-batch: reduce to one row per key (latest by `ts_col` with
-    id tiebreak), anti-join the existing snapshot, rewrite snapshot =
-    (existing minus upserted keys) ∪ batch winners. The rewrite is
-    atomic-enough for a demo (write tmp, swap dir would make it atomic; on
-    a real lake this is MERGE INTO / a transactional commit).
+    Each micro-batch reduces to one row per key (latest by `ts_col`,
+    then `tiebreak`) and lands those winners as its own `batch_id=N`
+    leaf through `sinks.write_epoch`; no earlier epoch's leaf is
+    touched, so a crash mid-write can lose nothing that committed, and a
+    replayed epoch replaces its own leaf. `read()` folds every leaf with
+    the same event-time `max_by` — the `MaterializedAggregateView`
+    pattern with a last-write-wins merge instead of a sum: a late,
+    OLDER event never beats a newer one from an earlier epoch.
+    `compact()` folds the leaves into one through the shared crash-safe
+    swap.
 
     Pass a unique `tiebreak` column for deterministic winners — the
     default (ts_col itself) leaves ties on (key, ts) to partition order."""
 
     def __init__(
-        self, snapshot_dir: str, key: str, ts_col: str, tiebreak: str | None = None
+        self, out_dir: str, key: str, ts_col: str, tiebreak: str | None = None
     ):
-        self.snapshot_dir = snapshot_dir
+        self.out_dir = out_dir
         self.key = key
         self.ts_col = ts_col
         self.tiebreak = tiebreak or ts_col
@@ -182,34 +192,21 @@ class CdcUpsertSink:
         )
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        spark = batch_df.sparkSession
-        winners = self._latest_per_key(batch_df)
-        try:
-            existing = spark.read.parquet(self.snapshot_dir)
-        except AnalysisException as e:
-            # ONLY path-not-found means "first batch"; any other failure
-            # (corrupt footer, permissions, schema drift) must surface —
-            # falling through would overwrite the snapshot with this
-            # batch's keys only, silently destroying prior upserts.
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            existing = None
-        if existing is not None:
-            # event-time last-write-wins: re-reduce over the union so a
-            # late-arriving OLDER event never clobbers a newer snapshot row
-            merged = self._latest_per_key(existing.unionByName(winners))
-        else:
-            merged = winners
-        # localCheckpoint truncates lineage: the overwrite below deletes the
-        # directory the plan reads from, and a cache-evicted partition would
-        # otherwise recompute from half-deleted input.
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(self.snapshot_dir)
+        _recover_compact(self.out_dir)
+        write_epoch(self._latest_per_key(batch_df), self.out_dir, epoch_id)
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.snapshot_dir)
+        """The current snapshot: one row per key."""
+        _recover_compact(self.out_dir)
+        return self._latest_per_key(
+            spark.read.parquet(self.out_dir).drop("batch_id")
+        )
+
+    def compact(self, spark: SparkSession) -> None:
+        """Fold every leaf into one `batch_id=-1` leaf. Same operational
+        constraint as `MaterializedAggregateView.compact`: run only while
+        the stream is stopped at a committed checkpoint."""
+        _compact_epochs(self.read(spark), self.out_dir)
 
 
 # --- point-in-time feature join against the SCD2 dimension -------------------

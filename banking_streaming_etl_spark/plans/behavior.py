@@ -1972,7 +1972,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     them back to back left the cluster idle ~2/3 of the time; the base
     frame is checkpointed EAGERLY first so the concurrent jobs share
     one computed copy instead of racing the lazy cache. The
-    (base, r, f, m) quadruple is session-memoized (api.MEMOIZED_QUERIES)
+    (base, r, f, m) quadruple is session-memoized
     so rebuilds are job-free."""
     from banking_streaming_etl_spark.functions import exact
     from banking_streaming_etl_spark.operators import memo, ranking

@@ -1047,7 +1047,7 @@ def dsir_effective_sample_size(
     # scalar and the per-source aggregate both reference the whole DSIR
     # n-gram pipeline; the old lazy persist dedup'd execution but still
     # re-analyzed the full subtree per branch (guide §2.4/§3.3).
-    # Session-memoized (api.MEMOIZED_QUERIES): the DSIR pipeline's
+    # Session-memoized: the DSIR pipeline's
     # build-time jobs run once per (session, sf), not per plan build.
     from banking_streaming_etl_spark.operators import memo
 

@@ -1343,12 +1343,12 @@ def quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qsk_day_sketch_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized per-day sketch table (api.MEMOIZED_QUERIES via
-    its consumers): <= days x G x Q rows, eager localCheckpoint. This
-    IS the partitioned sketch history — the whole-history rollup, the
-    time-range query, and every read-side branch (value ranks, counts,
-    day joins) derive from this ONE materialization; the raw fact is
-    scanned exactly once per (session, sf_dir)."""
+    """Session-memoized per-day sketch table: <= days x G x Q rows,
+    eager localCheckpoint. This IS the partitioned sketch history — the
+    whole-history rollup, the time-range query, and every read-side
+    branch (value ranks, counts, day joins) derive from this ONE
+    materialization; the raw fact is scanned exactly once per
+    (session, sf_dir)."""
     from banking_streaming_etl_spark.operators import memo
 
     return memo.shared_frame(

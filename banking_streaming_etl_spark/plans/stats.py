@@ -64,9 +64,9 @@ def ks_test_value_by_approval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final aggregate both reference it, and the old lazy persist still
     # re-analyzed (and on exchange-reuse misses re-executed) the whole
     # counts+prefix-sum DAG per branch — the checkpoint truncates both
-    # to one LogicalRDD (guide §2.4/§3.3). Session-memoized
-    # (api.MEMOIZED_QUERIES): the cumsum's build-time boundary jobs run
-    # once per (session, sf), not per plan build.
+    # to one LogicalRDD (guide §2.4/§3.3). Session-memoized: the
+    # cumsum's build-time boundary jobs run once per (session, sf), not
+    # per plan build.
     def _build_cum() -> DataFrame:
         t = _approved(spark, sf_dir).select(
             "id_transacao", "valor_transacao", "transacao_aprovada"
@@ -212,7 +212,7 @@ def spearman_value_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes materialize concurrently (ranking.overlap_checkpoint, guide
     §2.6) off an eagerly checkpointed base, halving the serial
     stage-wave depth; the (base, rank, rank) triple is session-memoized
-    (api.MEMOIZED_QUERIES) so rebuilds are job-free. Values
+    so rebuilds are job-free. Values
     unchanged."""
 
     def _build() -> list[DataFrame]:
@@ -1061,8 +1061,8 @@ def kruskal_value_by_modality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gv2, rank_tbl and grp each feed 2+ branches; persist dedup'd
     # execution but every branch still re-analyzed the full upstream DAG
     # — the checkpoint truncates it to one LogicalRDD (guide §2.4/§3.3).
-    # The (rank_tbl, grp) pair is session-memoized (api.MEMOIZED_QUERIES)
-    # so the cumsum's build-time boundary jobs run once per session/sf.
+    # The (rank_tbl, grp) pair is session-memoized so the cumsum's
+    # build-time boundary jobs run once per session/sf.
     dec0 = "decimal(38,0)"
 
     def _build_kw() -> list[DataFrame]:
@@ -1788,7 +1788,7 @@ def class_rebalance_downsample(
     # different projection into the window subtree — un-pinned, the
     # bucket window executed twice (round-14; guide §2.4 / §3.3
     # "materialising an intermediate truncates the plan").
-    # Session-memoized (api.MEMOIZED_QUERIES): the grouped ranking
+    # Session-memoized: the grouped ranking
     # pass's build-time budget jobs run once per (session, sf).
     def _build_ranked() -> DataFrame:
         ap = _approved(spark, sf_dir).select(

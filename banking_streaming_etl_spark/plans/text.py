@@ -2318,7 +2318,7 @@ def macro_ndcg_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize concurrently off the eager cand/gains memos — each is
     # a serial wave of blocking stages, so overlapping them (guide §2.6)
     # halves the wall-clock depth; the checkpointed outputs are <= Q*K
-    # rows, session-memoized (api.MEMOIZED_QUERIES) so rebuilds are
+    # rows, session-memoized so rebuilds are
     # job-free. Values unchanged (same frames, same order-independent
     # DCG aggregates). Plan-shape tests inspect the UNmaterialized pair
     # (_macro_grouped_ranked_lazy) — the checkpoint hides the ranking

@@ -12,13 +12,15 @@ implement with `DELETE WHERE batch_id = N` + insert in one transaction.
 
 The writer serves the flagship multi-sink (`pipeline.start_multi_sink`:
 history and scores), `IdempotentParquetSink`, the materialized aggregate
-and join views and the quantile-sketch store; every one of them starts
-through `start_foreach_batch`, and the two views share one crash-safe
-compaction swap (`_compact_epochs` / `_recover_compact`), which writes
-its folded store through `write_epoch` too. Readers see the epoch as a
-trailing `batch_id` int partition column, discovered from the directory
-names. An epoch with no rows still leaves a zero-row part file (with the
-schema) in its directory.
+and join views, the quantile-sketch store and the CDC upsert
+(`operators.scd.CdcUpsertSink`). Each sink is a `write_batch(batch_df,
+epoch_id)` callback, and every one starts through `start_foreach_batch`.
+The views and the CDC upsert fold their epochs on read and share one
+crash-safe compaction swap (`_compact_epochs` / `_recover_compact`),
+which writes its folded store through `write_epoch` too. Readers see the
+epoch as a trailing `batch_id` int partition column, discovered from the
+directory names. An epoch with no rows still leaves a zero-row part file
+(with the schema) in its directory.
 """
 
 from __future__ import annotations
@@ -112,16 +114,6 @@ class IdempotentParquetSink:
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.out_dir)
-
-
-def start_idempotent_sink(
-    result_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    columns: list[str] | None = None,
-) -> StreamingQuery:
-    sink = IdempotentParquetSink(out_dir, columns)
-    return start_foreach_batch(result_stream, sink.write_batch, checkpoint_dir)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -255,17 +247,6 @@ class MaterializedAggregateView:
         _compact_epochs(folded, self.out_dir)
 
 
-def start_materialized_view(
-    tx_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "modalidade_pagamento",
-    value_col: str = "valor_transacao",
-) -> StreamingQuery:
-    view = MaterializedAggregateView(out_dir, key_col, value_col)
-    return start_foreach_batch(tx_stream, view.write_batch, checkpoint_dir)
-
-
 class QuantileSketchStore:
     """Exactly-once streaming mergeable quantile-sketch store — the
     streaming face of `plans.relational.quantile_sketch_rollup`'s merge
@@ -354,13 +335,6 @@ class QuantileSketchStore:
         )
 
         return qsk_grid_answers(self.read_sample(spark))
-
-
-def start_quantile_sketch_store(
-    tx_stream: DataFrame, out_dir: str, checkpoint_dir: str
-) -> StreamingQuery:
-    store = QuantileSketchStore(out_dir)
-    return start_foreach_batch(tx_stream, store.write_batch, checkpoint_dir)
 
 
 class MaterializedJoinView:

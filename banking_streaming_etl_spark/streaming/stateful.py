@@ -47,13 +47,6 @@ def last_tx_per_user(approved_stream: DataFrame) -> DataFrame:
     )
 
 
-def last_approved_tx_per_user(approved_stream: DataFrame) -> DataFrame:
-    """The exact feature the reference removed: last APPROVED tx per user."""
-    return last_tx_per_user(
-        approved_stream.filter(F.col("transacao_aprovada"))
-    )
-
-
 def running_user_totals(approved_stream: DataFrame) -> DataFrame:
     """Per-user running count/sum/approval-rate (update mode)."""
     return approved_stream.groupBy("id_usuario_pagador").agg(
