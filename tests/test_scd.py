@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from banking_streaming_etl_spark import datamodel
 from banking_streaming_etl_spark.operators import scd
+from banking_streaming_etl_spark.sources import stream as stream_src
 
 SF = "/root/testdata/sf0.001"
 T0 = "2024-01-01 00:00:00"
@@ -69,6 +70,47 @@ def test_scd2_inserts_new_keys(spark):
     assert len(r) == 1
     assert r[0].is_current and str(r[0].valid_from).startswith("2024-02-01")
     assert out.count() == users.count() + 1  # nothing else changed
+
+
+def test_cdc_upsert_stream_matches_batch_last_value(spark, tmp_path):
+    d = str(tmp_path / "chunks")
+    stream_src.write_replay_chunks(spark, SF, d, n_chunks=4)
+    tx = stream_src.read_transaction_stream(
+        spark, d, max_files_per_trigger=1
+    ).select("id_usuario_pagador", "data_horario", "id_transacao", "valor_transacao")
+
+    sink = scd.CdcUpsertSink(
+        str(tmp_path / "snapshot"),
+        key="id_usuario_pagador",
+        ts_col="data_horario",
+        tiebreak="id_transacao",
+    )
+    q = (
+        tx.writeStream.outputMode("append")
+        .foreachBatch(sink.write_batch)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+
+    snap = {
+        (r.id_usuario_pagador, r.id_transacao)
+        for r in sink.read(spark).collect()
+    }
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("id_usuario_pagador").orderBy(
+        F.desc("data_horario"), F.desc("id_transacao")
+    )
+    want = {
+        (r.id_usuario_pagador, r.id_transacao)
+        for r in datamodel.transactions(spark, SF)
+        .withColumn("rn", F.row_number().over(w))
+        .filter("rn = 1")
+        .collect()
+    }
+    assert snap == want
 
 
 def test_snapshot_as_of_replay_semantics(spark):

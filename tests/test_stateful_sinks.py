@@ -84,6 +84,20 @@ def test_running_user_totals(spark, module_replay_dir):
     assert total.n == 1000
 
 
+def test_idempotent_sink_replay_no_duplicates(spark, tmp_path):
+    sink = sinks.IdempotentParquetSink(str(tmp_path / "out"))
+    batch = datamodel.transactions(spark, SF).limit(100)
+    sink.write_batch(batch, epoch_id=7)
+    n1 = sink.read(spark).count()
+    # replay the same epoch (simulating a post-failure retry) -> overwritten
+    sink.write_batch(batch, epoch_id=7)
+    n2 = sink.read(spark).count()
+    assert n1 == n2 == 100
+    # a NEW epoch appends
+    sink.write_batch(batch, epoch_id=8)
+    assert sink.read(spark).count() == 200
+
+
 def test_idempotent_streaming_end_to_end(spark, tmp_path, module_replay_dir):
     out = _approval_stream(spark, module_replay_dir)
     sink = sinks.IdempotentParquetSink(
@@ -165,6 +179,108 @@ def test_compact_parquet_preserves_content_and_bounds_files(spark, tmp_path):
     assert ranges[0][1] <= ranges[1][0]
 
 
+def test_restart_from_checkpoint_is_exactly_once(
+    spark, tmp_path, module_replay_dir
+):
+    """Kill the query mid-stream and restart it on the SAME checkpoint:
+    the restarted query must resume from the committed offset (not
+    re-read from scratch), and the epoch-keyed sink must land every
+    record exactly once — the crash-recovery contract checkpointing
+    exists to provide."""
+    import time
+
+    # a finer-grained replay (8 chunks, 1 file per trigger) so the kill
+    # reliably lands mid-stream
+    replay = str(tmp_path / "chunks8")
+    stream_src.write_replay_chunks(spark, SF, replay, n_chunks=8)
+
+    def start():
+        tx = stream_src.read_transaction_stream(
+            spark, replay, max_files_per_trigger=1
+        )
+        out = spipe.approval_stream(
+            tx, datamodel.users(spark, SF), datamodel.regions(spark, SF)
+        )
+        sink = sinks.IdempotentParquetSink(
+            str(tmp_path / "hist"), columns=["id_transacao", "transacao_aprovada"]
+        )
+        return sinks.start_foreach_batch(
+            out, sink.write_batch, str(tmp_path / "ckpt")
+        )
+
+    q1 = start()
+    # let at least one micro-batch commit, then kill mid-stream
+    deadline = time.time() + 60
+    while time.time() < deadline:
+        if any(p["batchId"] >= 0 for p in q1.recentProgress):
+            break
+        time.sleep(0.2)
+    q1.stop()
+    partial = spark.read.parquet(str(tmp_path / "hist")).count()
+    assert partial < 1000  # genuinely mid-stream
+
+    q2 = start()
+    q2.processAllAvailable()
+    q2.stop()
+    df = spark.read.parquet(str(tmp_path / "hist"))
+    assert df.count() == 1000
+    assert df.select("id_transacao").distinct().count() == 1000
+
+
+def test_materialized_view_replay_and_compact(spark, tmp_path):
+    """Additive-aggregate materialized view: a replayed epoch must NOT
+    double-add (delta overwritten, not appended), the folded view must
+    equal the batch groupBy bit-for-bit, and compact() must preserve it."""
+    view = sinks.MaterializedAggregateView(
+        str(tmp_path / "mv"), "modalidade_pagamento", "valor_transacao"
+    )
+    tx = datamodel.transactions(spark, SF)
+    half1 = tx.filter("id_transacao % 2 = 0")
+    half2 = tx.filter("id_transacao % 2 = 1")
+    view.write_batch(half1, epoch_id=0)
+    view.write_batch(half1, epoch_id=0)  # post-failure replay
+    view.write_batch(half2, epoch_id=1)
+
+    got = {
+        (r.modalidade_pagamento, r.n, r.soma)
+        for r in view.read(spark).collect()
+    }
+    from banking_streaming_etl_spark.functions import exact
+
+    want = {
+        (r.modalidade_pagamento, r.n, r.soma)
+        for r in tx.groupBy("modalidade_pagamento")
+        .agg(
+            F.count("*").alias("n"),
+            exact.exact_sum("valor_transacao", "soma"),
+        )
+        .collect()
+    }
+    assert got == want
+
+    view.compact(spark)
+    after = {
+        (r.modalidade_pagamento, r.n, r.soma)
+        for r in view.read(spark).collect()
+    }
+    assert after == want
+    assert (
+        spark.read.parquet(str(tmp_path / "mv"))
+        .select("batch_id").distinct().count() == 1
+    )
+
+    # epochs arriving AFTER a compaction must append to the folded state
+    # (a mixed partitioned/unpartitioned layout would silently drop the
+    # compacted history from partition discovery)
+    view.write_batch(half1, epoch_id=2)
+    grown = {r.modalidade_pagamento: r.n for r in view.read(spark).collect()}
+    base = {r.modalidade_pagamento: r.n for r in tx.groupBy(
+        "modalidade_pagamento").agg(F.count("*").alias("n")).collect()}
+    extra = {r.modalidade_pagamento: r.n for r in half1.groupBy(
+        "modalidade_pagamento").agg(F.count("*").alias("n")).collect()}
+    assert grown == {k: base[k] + extra.get(k, 0) for k in base}
+
+
 def test_materialized_view_streaming_end_to_end(spark, tmp_path, module_replay_dir):
     """The streaming materialized view over the replayed events equals the
     batch aggregate of the same data."""
@@ -195,6 +311,175 @@ def test_materialized_view_streaming_end_to_end(spark, tmp_path, module_replay_d
         .collect()
     }
     assert got == want
+
+
+def test_materialized_view_recovers_interrupted_compact(spark, tmp_path):
+    """A compact() crash between the rename-aside and the promote leaves
+    (no live dir, complete `__old` backup). The next read/write_batch
+    must restore the backup — NOT silently recreate an empty view."""
+    import os
+    import shutil
+
+    mv = str(tmp_path / "mv")
+    view = sinks.MaterializedAggregateView(
+        mv, "modalidade_pagamento", "valor_transacao"
+    )
+    tx = datamodel.transactions(spark, SF)
+    view.write_batch(tx, epoch_id=0)
+    want = {
+        (r.modalidade_pagamento, r.n, r.soma)
+        for r in view.read(spark).collect()
+    }
+
+    # simulate the crash window: live dir renamed aside, stray temp left
+    os.rename(mv, mv + "__old")
+    os.makedirs(mv + "__compact")
+
+    recovered = {
+        (r.modalidade_pagamento, r.n, r.soma)
+        for r in view.read(spark).collect()
+    }
+    assert recovered == want
+    assert not os.path.exists(mv + "__old")
+    assert not os.path.exists(mv + "__compact")
+
+    # and write_batch on the crashed state appends instead of restarting
+    os.rename(mv, mv + "__old")
+    view.write_batch(tx, epoch_id=1)
+    grown = {r.modalidade_pagamento: r.n for r in view.read(spark).collect()}
+    doubled = {
+        r.modalidade_pagamento: 2 * r.n
+        for r in tx.groupBy("modalidade_pagamento")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert grown == doubled
+
+
+def test_idempotent_sink_survives_midstream_kill_and_restart(
+    spark, tmp_path, module_replay_dir
+):
+    """T5 under failure: stop the query after the FIRST micro-batch (a
+    mid-stream 'crash'), restart from the same checkpoint, drain, then
+    restart once more with no new data — the epoch-keyed sink must end
+    with exactly one row per transaction (no loss from the kill, no
+    dupes from the replayed epoch, no dupes from the idle restart)."""
+    import shutil
+    import tempfile
+
+    # private replay dir: the module fixture is shared across tests
+    d = tempfile.mkdtemp(prefix="replay_kill_")
+    try:
+        shutil.copytree(module_replay_dir, d, dirs_exist_ok=True)
+        hist = str(tmp_path / "hist")
+        ckpt = str(tmp_path / "ckpt")
+
+        def start():
+            tx = stream_src.read_transaction_stream(
+                spark, d, max_files_per_trigger=1
+            )
+            out = spipe.approval_stream(
+                tx, datamodel.users(spark, SF), datamodel.regions(spark, SF)
+            )
+            sink = sinks.IdempotentParquetSink(
+                hist, columns=["id_transacao", "transacao_aprovada"]
+            )
+            return sinks.start_foreach_batch(out, sink.write_batch, ckpt)
+
+        q = start()
+        # wait for at least one committed batch, then kill mid-stream
+        import time
+
+        deadline = time.time() + 60
+        while time.time() < deadline:
+            if any(
+                int(p.get("numInputRows", 0) or 0) > 0
+                for p in q.recentProgress
+            ):
+                break
+            time.sleep(0.2)
+        q.stop()
+
+        q2 = start()
+        q2.processAllAvailable()
+        q2.stop()
+
+        q3 = start()  # idle restart: nothing new to process
+        q3.processAllAvailable()
+        q3.stop()
+
+        df = spark.read.parquet(hist)
+        assert df.count() == 1000
+        assert df.select("id_transacao").distinct().count() == 1000
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_quantile_sketch_store_survives_kill_and_restart(
+    spark, tmp_path, module_replay_dir
+):
+    """The mergeable sketch store under failure: kill after the first
+    committed micro-batch, restart from the same checkpoint (Spark
+    replays the in-flight epoch — its delta OVERWRITES its own
+    batch_id partition AND the fold is min-wise idempotent, a double
+    safety), then an idle restart. The folded sample must equal the
+    direct batch bottom-Q over all replayed rows exactly."""
+    import shutil
+    import tempfile
+    import time
+
+    from banking_streaming_etl_spark.plans import relational
+
+    d = tempfile.mkdtemp(prefix="replay_qsk_kill_")
+    try:
+        shutil.copytree(module_replay_dir, d, dirs_exist_ok=True)
+        store = sinks.QuantileSketchStore(str(tmp_path / "qsk_store"))
+        ckpt = str(tmp_path / "qsk_ckpt")
+
+        def start():
+            tx = stream_src.read_transaction_stream(
+                spark, d, max_files_per_trigger=1
+            )
+            return (
+                tx.writeStream.outputMode("append")
+                .foreachBatch(store.write_batch)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+
+        q = start()
+        deadline = time.time() + 60
+        while time.time() < deadline:
+            if any(
+                int(p.get("numInputRows", 0) or 0) > 0
+                for p in q.recentProgress
+            ):
+                break
+            time.sleep(0.2)
+        q.stop()
+
+        q2 = start()
+        q2.processAllAvailable()
+        q2.stop()
+
+        q3 = start()  # idle restart: nothing new to process
+        q3.processAllAvailable()
+        q3.stop()
+
+        got = {
+            (r.modalidade_pagamento, r.tid, r.v, r.h)
+            for r in store.read_sample(spark).collect()
+        }
+        direct = sinks.QuantileSketchStore._bottom_q(
+            relational._qsk_rows(spark, SF)
+        )
+        want = {
+            (r.modalidade_pagamento, r.tid, r.v, r.h)
+            for r in direct.collect()
+        }
+        assert got and got == want
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 # --- delta-join incremental view maintenance (round 14) ---------------------

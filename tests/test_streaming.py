@@ -239,6 +239,78 @@ def test_multisink_warm_batch_jobs_and_compiles(spark, replay_dir, tmp_path):
     assert compiles[1:] == [5] * (len(compiles) - 1), compiles
 
 
+def test_failed_sink_write_leaves_recent_view_untouched(
+    spark, replay_dir, tmp_path
+):
+    """The recent view is a side effect of a COMMITTED epoch: when a sink
+    write fails (scores_dir is a regular file, so the scores write
+    cannot create its directory) the query fails and the view stays
+    empty, even though the top-K collect ran concurrently and
+    succeeded.
+
+    The history write of that failed epoch did commit. Restarting on the
+    same checkpoint once the blocking file is gone re-runs the epoch;
+    the epoch-keyed sinks overwrite its partition, so history and scores
+    each hold every id exactly once and history equals the batch twin
+    (an appending sink would hold the first epoch twice)."""
+    import struct
+
+    from pyspark.errors import StreamingQueryException
+
+    def start(view):
+        tx = stream_src.read_transaction_stream(
+            spark, replay_dir, max_files_per_trigger=2
+        )
+        out = spipe.approval_stream(
+            tx, datamodel.users(spark, SF), datamodel.regions(spark, SF)
+        )
+        return spipe.start_multi_sink(
+            out,
+            history_dir=str(tmp_path / "hist"),
+            scores_dir=str(scores_file),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            recent_view=view,
+            recent_k=50,
+        )
+
+    scores_file = tmp_path / "scores"
+    scores_file.write_text("not a directory")
+    view = spipe.RecentTransactionsView(capacity=500)
+    q = start(view)
+    try:
+        with pytest.raises(StreamingQueryException):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert q.exception() is not None
+    assert len(view) == 0
+
+    scores_file.unlink()
+    q = start(view)
+    q.processAllAvailable()
+    q.stop()
+
+    def bits(r):
+        return (
+            r.id_transacao,
+            struct.pack("<d", r.score_medio),
+            r.transacao_aprovada,
+        )
+
+    cols = ["id_transacao", "score_medio", "transacao_aprovada"]
+    hist = spark.read.parquet(str(tmp_path / "hist"))
+    scores = spark.read.parquet(str(scores_file))
+    for sink in (hist, scores):
+        assert sink.count() == 1000
+        assert sink.select("id_transacao").distinct().count() == 1000
+    got = sorted(bits(r) for r in hist.select(*cols).collect())
+    want = sorted(
+        bits(r) for r in approval_pipeline(spark, SF).select(*cols).collect()
+    )
+    assert got == want
+    assert len(view) > 0
+
+
 def test_streaming_analytics_match_batch(spark, replay_dir):
     """The live analytics (report's production direction) equal the batch
     dashboard queries once the stream is drained."""
